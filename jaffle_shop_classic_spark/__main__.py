@@ -11,16 +11,27 @@ tables (the `dbt show` / warehouse-console analog).
     python -m jaffle_shop_classic_spark curate --sf-dir ... --out /tmp/corpus
     python -m jaffle_shop_classic_spark query --name rfm_customer_segments
     python -m jaffle_shop_classic_spark sql -e "SELECT count(*) FROM orders"
+
+Each verb does only its own work, as in dbt. `seed` (re)loads the CSVs
+into the warehouse and `run` (re)builds the models. `test` and `docs`
+act on the relations already stored in `--warehouse`: a stored seed is
+used while it is no older than its CSV, and a stored table while it is
+no older than every stored relation it reads. `test` and `docs` build a
+relation only when it is missing or stale, and always when
+`--warehouse` is unset; `run` and `snapshot` reuse seeds by the same
+rule. Independent Spark actions (seed loads, the models of one DAG
+level, the 20 checks, the row counts `run` prints) run side by side.
 """
 
 from __future__ import annotations
 
 import argparse
+import functools
 import sys
 
 from .models.jaffle import build_project, build_snapshots, jaffle_checks, load_jaffle_sources
 from .plans.docs import generate_catalog, render_markdown, write_catalog
-from .session import get_spark
+from .session import get_spark, run_concurrently
 from .sources.seeds import DEFAULT_SEED_DIR
 from .testing.checks import run_checks
 
@@ -185,7 +196,20 @@ def main(argv=None) -> int:
         return 0
 
     project = build_project(warehouse_dir=args.warehouse)
-    load_jaffle_sources(project, spark, args.seed_dir)
+    project.reuse_stored = args.command in ("test", "docs")
+    load_jaffle_sources(project, spark, args.seed_dir, reload=args.command == "seed")
+
+    def row_counts(relations: dict) -> list[int]:
+        # a relation this invocation wrote reports the rows its write
+        # counted; any other (a view, a seed without a warehouse) runs
+        # a count, side by side with the rest
+        def rows(name, df) -> int:
+            n = project.written.get(name)
+            return df.count() if n is None else n
+
+        return run_concurrently(
+            spark, [functools.partial(rows, name, df) for name, df in relations.items()]
+        )
 
     yaml_tests = []
     if args.project_yaml:
@@ -197,8 +221,8 @@ def main(argv=None) -> int:
             )
 
     if args.command == "seed":
-        for name, df in project.sources.items():
-            print(f"{name}: {df.count()} rows")
+        for name, n in zip(project.sources, row_counts(project.sources)):
+            print(f"{name}: {n} rows")
         return 0
 
     if args.command == "snapshot":
@@ -232,11 +256,9 @@ def main(argv=None) -> int:
         print(f"error: {exc.args[0]}", file=sys.stderr)
         return 2
     if args.command == "run":
-        for name in project.topo_order():
-            if name not in built:
-                continue
-            spec = project.models[name]
-            print(f"{name} [{spec.materialized}]: {built[name].count()} rows")
+        # `built` is in topological order
+        for name, n in zip(built, row_counts(built)):
+            print(f"{name} [{project.models[name].materialized}]: {n} rows")
         return 0
 
     if args.command == "test":

@@ -209,9 +209,14 @@ def build_snapshots(project: Project) -> Project:
     return project
 
 
-def load_jaffle_sources(project: Project, spark, seed_dir: str = DEFAULT_SEED_DIR) -> None:
-    """`dbt seed`: attach the 3 seed CSVs as sources."""
-    for name, df in load_seeds(spark, seed_dir, project.warehouse_dir).items():
+def load_jaffle_sources(
+    project: Project, spark, seed_dir: str = DEFAULT_SEED_DIR, reload: bool = True
+) -> None:
+    """`dbt seed`: attach the 3 seed CSVs as sources. With
+    ``reload=False`` (every verb but `seed`) a seed already stored in the
+    project's warehouse and no older than its CSV is read from there."""
+    seeds = load_seeds(spark, seed_dir, project.warehouse_dir, reload, project.written)
+    for name, df in seeds.items():
         project.add_source(name, df)
 
 

@@ -12,20 +12,29 @@ is the edge; materialization mirrors /root/reference/dbt_project.yml:22-27:
            what a warehouse does with SQL views.
   table -> eager Parquet write + re-read: cuts lineage, precomputes for
            reuse, and gives AQE fresh size stats; at cluster scale this
-           is also the unit of incremental scheduling.
+           is also the unit of incremental scheduling. With
+           ``reuse_stored`` (the `test` and `docs` verbs) a stored table
+           no older than every stored relation it reads is read back
+           instead of rebuilt, as dbt's test/docs act on the warehouse.
 
-Cycles are rejected at run time; independent nodes could run
-concurrently (the scheduler walks levels), though Spark's own task
-parallelism usually saturates the cluster from a single node.
+Cycles are rejected at run time. ``run`` walks the DAG level by level
+(graphlib's ``get_ready``/``done``) and materializes the models of one
+level concurrently: at small scale each write is mostly fixed
+scheduling cost, so two independent marts overlap instead of queueing.
 """
 
 from __future__ import annotations
 
+import functools
+import threading
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import run_concurrently
+from ..sources.warehouse import is_fresh, success_marker, write_relation
 
 
 @dataclass
@@ -87,7 +96,14 @@ class Project:
         self.models: dict[str, ModelSpec] = {}
         self.sources: dict[str, DataFrame] = {}
         self.warehouse_dir = warehouse_dir
+        # read a fresh stored table instead of rebuilding it (the verbs
+        # that only read relations set this: `test`, `docs`)
+        self.reuse_stored = False
+        # rows stored by the latest write of each relation, counted on
+        # the write itself (seeds record theirs here too)
+        self.written: dict[str, int] = {}
         self._built: dict[str, DataFrame] = {}
+        self._locks: dict[str, threading.RLock] = {}
 
     # -- registration -----------------------------------------------------
     def model(
@@ -262,9 +278,15 @@ class Project:
         # a model lazily built via ctx.ref() during this run must not be
         # materialized AGAIN when the run loop reaches it — for an
         # incremental model that second build would write a spurious
-        # extra version in the same run
-        if spec.name in self._built:
+        # extra version in the same run. The per-model lock keeps that
+        # true when two models of one level ref the same undeclared
+        # upstream from their own threads.
+        with self._locks.setdefault(spec.name, threading.RLock()):
+            if spec.name not in self._built:
+                self._built[spec.name] = self._build(spec, spark)
             return self._built[spec.name]
+
+    def _build(self, spec: ModelSpec, spark: SparkSession) -> DataFrame:
         # incremental/snapshot enforce the contract on the model's own
         # output INSIDE their materializers, before _write_version — a
         # contract-violating batch must never persist a new version
@@ -279,14 +301,32 @@ class Project:
             if spec.materialized == "table":
                 if self.warehouse_dir is not None:
                     path = f"{self.warehouse_dir}/{spec.name}"
-                    df.write.mode("overwrite").parquet(path)
-                    df = spark.read.parquet(path)
+                    if not (
+                        self.reuse_stored and is_fresh(path, self._stored_inputs(spec.deps))
+                    ):
+                        self.written[spec.name] = write_relation(df, path)
+                    # the analyzed schema: no schema-inference job
+                    df = spark.read.schema(df.schema).parquet(path)
                 else:  # no warehouse: emulate eagerness via cache
                     df = df.cache()
         if spec.materialized != "ephemeral":
             df.createOrReplaceTempView(spec.name)
-        self._built[spec.name] = df
         return df
+
+    def _stored_inputs(self, deps: Sequence[str]) -> list[str]:
+        """``_SUCCESS`` markers of the stored relations that ``deps``
+        read, looking through views and ephemeral models: seed parquet
+        and table models. A source or model without one (an in-memory
+        source, versioned incremental state) points at a missing marker,
+        so the reader is never taken as fresh."""
+        markers = []
+        for dep in deps:
+            spec = self.models.get(dep)
+            if spec is not None and spec.materialized in ("view", "ephemeral"):
+                markers += self._stored_inputs(spec.deps)
+            else:
+                markers.append(success_marker(f"{self.warehouse_dir}/{dep}"))
+        return markers
 
     # -- versioned table storage (incremental / snapshot state) -----------
     # A build never overwrites the files it just read (parquet reads are
@@ -356,8 +396,8 @@ class Project:
             raise ValueError(f"{name}: incremental/snapshot models need a warehouse_dir")
         v = (self._latest_version(name) or 0) + 1
         path = f"{self.warehouse_dir}/{name}/v{v}"
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        self.written[name] = write_relation(df, path)
+        return spark.read.schema(df.schema).parquet(path)
 
     def _materialize_incremental(self, spec: ModelSpec, spark: SparkSession) -> DataFrame:
         """dbt's incremental materialization, delete+insert strategy: the
@@ -542,11 +582,13 @@ class Project:
                 wanted |= self._descendants(name)
         return wanted
 
-    def topo_order(self) -> list[str]:
-        ts = TopologicalSorter(
+    def _sorter(self) -> TopologicalSorter:
+        return TopologicalSorter(
             {name: [d for d in spec.deps if d in self.models] for name, spec in self.models.items()}
         )
-        return list(ts.static_order())  # raises CycleError on cycles
+
+    def topo_order(self) -> list[str]:
+        return list(self._sorter().static_order())  # raises CycleError on cycles
 
     def run(self, spark: SparkSession, select: Sequence[str] | None = None) -> dict[str, DataFrame]:
         """Materialize all (or selected) models in dependency order.
@@ -555,7 +597,6 @@ class Project:
         regardless (they must exist to resolve), exactly as dbt assumes
         upstream relations exist in the warehouse."""
         self._built.clear()
-        order = self.topo_order()
         if select:
             wanted = self.select_set(select)
             # selected models plus every transitive ancestor, computed
@@ -564,11 +605,26 @@ class Project:
                 *(self._ancestors(m) for m in wanted)
             )
         else:
-            needed = None
-        for name in order:
-            if needed is None or name in needed:
-                self._materialize(self.models[name], spark)
-        return dict(self._built)
+            needed = set(self.models)
+        # level by level: every model of a level has its deps built, so
+        # the level's models are independent and materialize side by side
+        ts = self._sorter()
+        ts.prepare()  # raises CycleError on cycles
+        order: list[str] = []
+        while ts.is_active():
+            level = ts.get_ready()
+            run_concurrently(
+                spark,
+                [
+                    functools.partial(self._materialize, self.models[name], spark)
+                    for name in level
+                    if name in needed
+                ],
+            )
+            order += level
+            ts.done(*level)
+        # in topological order, as the serial loop built them
+        return {name: self._built[name] for name in order if name in self._built}
 
 
 # module-level default project for the jaffle models

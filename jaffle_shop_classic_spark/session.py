@@ -5,13 +5,23 @@ setting cluster-portable: AQE handles runtime re-planning (partition
 coalescing, skew joins) on a real cluster; UTC session timezone pins
 timestamp semantics so results compare exactly against the DuckDB oracle
 (DuckDB timestamps are UTC-naive).
+
+``run_concurrently`` overlaps independent Spark actions on a few Python
+threads: at small scale an action is mostly fixed scheduling cost, so
+independent ones are cheaper side by side than in a row.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -50,3 +60,18 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def run_concurrently(spark: SparkSession, fns: Sequence[Callable[[], T]]) -> list[T]:
+    """Call each of ``fns`` (independent Spark actions) on a pool of at
+    most ``defaultParallelism`` threads; return their results in input
+    order. Every call runs to completion, then the first failure in input
+    order is re-raised, so callers see the exception the serial loop
+    would have raised first. Each call inherits the caller's local
+    properties (job group, scheduler pool) as they are at submission."""
+    if len(fns) <= 1:
+        return [fn() for fn in fns]
+    workers = min(len(fns), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(fn)) for fn in fns]
+    return [f.result() for f in futures]

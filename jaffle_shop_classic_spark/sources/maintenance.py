@@ -19,6 +19,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .warehouse import write_relation
+
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # the canonical HDFS/parquet target
 
 
@@ -66,18 +68,10 @@ def compact_table(
         )
     else:
         out = df.repartition(target_files)
-    # row count rides the write itself via an Observation — no second
-    # full scan of the fresh output just for a stat
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    obs = Observation()
-    out.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-        "overwrite"
-    ).parquet(out_path)
+    rows = write_relation(out, out_path)  # counted on the write itself
     after = _data_files(out_path)
     return {
         "files_before": len(before),
         "files_after": len(after),
-        "rows": obs.get["rows"],
+        "rows": rows,
     }

@@ -314,7 +314,7 @@ def dedup_within_watermark(events: DataFrame, watermark: str = "1 hour") -> Data
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
 
 
-def _stream_state_parts(sf_dir: str) -> int:
+def _stream_state_parts(sf_dir: str, source: str = "events.parquet") -> int:
     """Input-size-derived state-partition count for a streaming query.
 
     Every stateful streaming operator keeps ONE state store per shuffle
@@ -330,7 +330,7 @@ def _stream_state_parts(sf_dir: str) -> int:
     micro-batch will actually carry (guide §2: scale partitioning with
     input size, not a constant tuned for either local mode or the
     cluster): one partition per SPARK_GRAFT_STREAM_PART_BYTES (default
-    16 MiB) of source file, floor SPARK_GRAFT_STREAM_MIN_PARTS (default
+    16 MiB) of the stream's source file (``source`` in ``sf_dir``), floor SPARK_GRAFT_STREAM_MIN_PARTS (default
     8 — the floor is NOT 2 because per-batch compute still parallelizes
     across these partitions: at sf0.1 the applyInPandasWithState and
     sliding-window aggregations measured 1.7x-2x SLOWER at 2 partitions
@@ -344,7 +344,7 @@ def _stream_state_parts(sf_dir: str) -> int:
     part_bytes = int(os.environ.get("SPARK_GRAFT_STREAM_PART_BYTES", str(16 << 20)))
     min_parts = int(os.environ.get("SPARK_GRAFT_STREAM_MIN_PARTS", "8"))
     max_parts = int(os.environ.get("SPARK_GRAFT_STREAM_MAX_PARTS", "4096"))
-    size = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
+    size = os.path.getsize(os.path.join(sf_dir, source))
     return max(min_parts, min(max_parts, (size + part_bytes - 1) // part_bytes))
 
 
@@ -373,37 +373,37 @@ def run_stream_to_batch(
     session value afterwards (the drain is synchronous, so no other
     query observes the change)."""
     spark = streaming_df.sparkSession
-    saved_parts = None
-    if state_parts is not None:
-        saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
-    if output_mode == "append":
-        out_dir = tempfile.mkdtemp(prefix=f"{name}-")
-        _SINK_DIRS[name] = out_dir
-        q = (
-            streaming_df.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    else:
-        out_dir = None
-        q = (
-            streaming_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
+    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    q = None
     try:
+        # pinned inside the try: a failed start restores it too
+        if state_parts is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
+        if output_mode == "append":
+            out_dir = tempfile.mkdtemp(prefix=f"{name}-")
+            _SINK_DIRS[name] = out_dir
+            q = (
+                streaming_df.writeStream.format("parquet")
+                .option("path", out_dir)
+                .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+        else:
+            out_dir = None
+            q = (
+                streaming_df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .trigger(availableNow=True)
+                .start()
+            )
         finished = q.awaitTermination(timeout=120)
     finally:
-        if q.isActive:  # pragma: no cover — safety net
+        if q is not None and q.isActive:  # pragma: no cover — safety net
             q.stop()
-        if saved_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
+        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
     if not finished:  # pragma: no cover — CI-load safety net
         # a silent timeout would hand the caller a PARTIALLY-filled
         # sink that masquerades as a semantics bug downstream
@@ -478,14 +478,15 @@ _SINK_DIRS: dict[str, str] = {}  # sink name -> file-sink scratch dir
 
 def _drain(
     df: DataFrame, base: str, output_mode: str = "append",
-    sf_dir: str | None = None,
+    sf_dir: str | None = None, source: str = "events.parquet",
 ) -> DataFrame:
     """Unique sink name per call so re-runs don't collide; the PREVIOUS
     generation's sink for the same base is dropped (memory-sink temp
     view and/or file-sink scratch dir) so repeated bench/parity rounds
     don't pin every past result set in driver memory or scratch disk.
-    When `sf_dir` is given the drain runs under the input-size-derived
-    state-partition count (see _stream_state_parts)."""
+    When `sf_dir` is given the drain runs under the state-partition
+    count derived from the size of its `source` file there (see
+    _stream_state_parts)."""
     name = f"{base}_{next(_SINK_SEQ)}"
     stale = _LAST_SINK.get(base)
     if stale is not None:
@@ -494,7 +495,7 @@ def _drain(
         if stale_dir is not None:
             shutil.rmtree(stale_dir, ignore_errors=True)
     _LAST_SINK[base] = name
-    parts = _stream_state_parts(sf_dir) if sf_dir is not None else None
+    parts = _stream_state_parts(sf_dir, source) if sf_dir is not None else None
     return run_stream_to_batch(df, name, output_mode, state_parts=parts)
 
 
@@ -827,7 +828,7 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_neardup_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = neardup_dedup_stream(stream_documents(spark, sf_dir)).select("simhash")
-    return _drain(deduped, "stream_neardup", sf_dir=sf_dir)
+    return _drain(deduped, "stream_neardup", sf_dir=sf_dir, source="documents.parquet")
 
 
 @register(

@@ -16,11 +16,14 @@ so they run at data scale, not driver scale.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import run_concurrently
 
 
 def unique(df: DataFrame, column: str) -> DataFrame:
@@ -130,15 +133,23 @@ class CheckResult:
 
 def run_checks(checks: dict[str, DataFrame], sample_rows: int = 5) -> list[CheckResult]:
     """Evaluate named violation frames; report violating rows on failure
-    (the `dbt test --store-failures` behavior)."""
-    results = []
-    for name, viol in checks.items():
-        rows = viol.limit(sample_rows + 1).collect()
-        if not rows:
-            results.append(CheckResult(name, True, 0))
-        else:
-            # the sample already proves the exact count unless it
-            # overflowed — only then re-run the plan for the total
-            n = len(rows) if len(rows) <= sample_rows else viol.count()
-            results.append(CheckResult(name, False, n, [r.asDict() for r in rows[:sample_rows]]))
-    return results
+    (the `dbt test --store-failures` behavior). The checks are
+    independent read-only queries, so they run side by side; results
+    keep the order of ``checks``."""
+    if not checks:
+        return []
+    spark = next(iter(checks.values())).sparkSession
+    return run_concurrently(
+        spark,
+        [functools.partial(_check, name, viol, sample_rows) for name, viol in checks.items()],
+    )
+
+
+def _check(name: str, viol: DataFrame, sample_rows: int) -> CheckResult:
+    rows = viol.limit(sample_rows + 1).collect()
+    if not rows:
+        return CheckResult(name, True, 0)
+    # the sample already proves the exact count unless it overflowed —
+    # only then re-run the plan for the total
+    n = len(rows) if len(rows) <= sample_rows else viol.count()
+    return CheckResult(name, False, n, [r.asDict() for r in rows[:sample_rows]])

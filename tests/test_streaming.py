@@ -841,7 +841,8 @@ def test_stream_pending_generation_requires_matching_checkpoint(spark, tmp_path)
 
 def test_stream_state_parts_derivation_and_restore(spark, sf_dir, monkeypatch):
     """r16: streaming state-partition count derives from the source file
-    size (one partition per SPARK_GRAFT_STREAM_PART_BYTES, floor 2, cap
+    size (one partition per SPARK_GRAFT_STREAM_PART_BYTES, floor
+    SPARK_GRAFT_STREAM_MIN_PARTS = 8 by default, cap
     SPARK_GRAFT_STREAM_MAX_PARTS) — decoupled from the core-count-
     coupled session default — and the session's shuffle-partition conf
     is restored after the drain."""
