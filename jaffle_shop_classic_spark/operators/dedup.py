@@ -23,6 +23,8 @@ the plan shape is unchanged.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Hashable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -749,6 +751,79 @@ def _symmetric_edges(pairs: DataFrame) -> DataFrame:
     )
 
 
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    probe: Callable[[DataFrame], Hashable],
+    max_rounds: int,
+    what: str,
+    oracle_rounds: int | None = None,
+) -> tuple[DataFrame, int]:
+    """Run ``step`` until ``probe`` stops moving; returns (state, rounds)
+    where ``rounds`` is the round whose probe matched its predecessor.
+
+    Every round's output is cut from its lineage by a LAZY
+    localCheckpoint that the probe's action materializes, so a round
+    costs the step's own jobs plus one probe job, and round r's plan is
+    never longer than one step. ``probe`` must be monotone in the
+    round (labels only fall, edges only disappear, ...) so an unchanged
+    value is the fixpoint. Raises RuntimeError naming ``what`` when the
+    cap is hit instead of returning a non-fixpoint, and — when
+    ``oracle_rounds`` is the DuckDB twin's unroll depth — as soon as
+    more rounds changed the state than the twin unrolls, since the
+    unrolled oracle equals the fixpoint only inside that depth. At
+    100 TB the lazy localCheckpoint swaps for a durable checkpoint."""
+    prev = probe(state)
+    for rounds in range(1, max_rounds + 1):
+        state = step(state).localCheckpoint(eager=False)
+        cur = probe(state)
+        if cur == prev:
+            return state, rounds
+        if oracle_rounds is not None and rounds > oracle_rounds:
+            raise RuntimeError(
+                f"{what} changed for {rounds} rounds but the DuckDB twin "
+                f"unrolls only {oracle_rounds} — raise its unroll depth "
+                "to keep parity sound"
+            )
+        prev = cur
+    raise RuntimeError(f"{what} did not converge in {max_rounds} rounds")
+
+
+def min_label_components(edges: DataFrame, max_rounds: int) -> DataFrame:
+    """Hash-min connected components of a symmetric (src, dst) edge
+    list -> DataFrame[node, label], label = min node of the component.
+
+    Round 0 is fused: label(u) = min(u, min(N(u))) is exactly what one
+    propagation of identity labels produces, but costs ONE aggregate
+    over the edges instead of distinct + join + union + agg (every node
+    appears as src, so no node list is needed). Each further round
+    joins labels to the edges and keeps min(neighbor label, own label);
+    labels only ever decrease, so the sum-of-labels probe is monotone.
+    Rounds needed = graph diameter; high-diameter graphs take
+    ``star_components`` instead."""
+    labels = (
+        edges.groupBy(F.col("src").alias("node"))
+        .agg(F.min("dst").alias("mn"))
+        .select("node", F.least(F.col("node"), F.col("mn")).alias("label"))
+        .localCheckpoint(eager=False)
+    )
+
+    def step(labels: DataFrame) -> DataFrame:
+        prop = edges.join(labels, edges.src == labels.node).select(
+            F.col("dst").alias("node"), "label"
+        )
+        return labels.unionByName(prop).groupBy("node").agg(F.min("label").alias("label"))
+
+    labels, _ = fixpoint(
+        labels,
+        step,
+        lambda labels: labels.agg(F.sum("label")).first()[0],
+        max_rounds,
+        "hash-min connected components",
+    )
+    return labels
+
+
 # Both CC variants compute the same fixpoint (component_id = min doc_id
 # reachable over the LSH candidate graph), so they share one oracle;
 # the CTE prefix is reused by dedup_keep_best_representative.
@@ -808,43 +883,9 @@ _CC_ORACLE = f"""{_CC_CTES}
 )
 def q_dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _symmetric_edges(_lsh_candidate_pairs(spark, sf_dir))
-    # fused init + round 1: label(u) = min(u, min(N(u))) is exactly what
-    # propagating identity labels once produces, but costs ONE aggregate
-    # over the symmetric edges instead of distinct + join + union + agg
-    # (every node appears as src, so no node list is needed)
-    # lazy checkpoints: the sum probe right after is the materializing
-    # action, so each round costs ONE job instead of two (checkpoint +
-    # probe); lineage is still truncated once materialized
-    labels = (
-        edges.groupBy(F.col("src").alias("doc_id"))
-        .agg(F.min("dst").alias("mn"))
-        .select("doc_id", F.least(F.col("doc_id"), F.col("mn")).alias("label"))
-        .localCheckpoint(eager=False)
+    comp = min_label_components(edges, MAX_CC_ITERS).select(
+        F.col("node").alias("doc_id"), F.col("label").alias("component_id")
     )
-    prev_sum = labels.agg(F.sum("label")).first()[0]
-    for _ in range(MAX_CC_ITERS):
-        prop = edges.join(labels, edges.src == labels.doc_id).select(
-            F.col("dst").alias("doc_id"), "label"
-        )
-        labels = (
-            labels.unionByName(prop)
-            .groupBy("doc_id")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
-        )
-        new_sum = labels.agg(F.sum("label")).first()[0]
-        if new_sum == prev_sum:  # labels only ever decrease -> fixpoint
-            break
-        prev_sum = new_sum
-    else:
-        # Silently returning non-converged labels would diverge from the
-        # recursive-CTE oracle fixpoint with no error signal.
-        raise RuntimeError(
-            f"connected components did not converge in {MAX_CC_ITERS} "
-            "iterations — graph diameter exceeds the cap; raise "
-            "MAX_CC_ITERS or switch to large-star/small-star rounds"
-        )
-    comp = labels.select("doc_id", F.col("label").alias("component_id"))
     sizes = comp.groupBy("component_id").agg(F.count(F.lit(1)).alias("n_members"))
     return comp.join(sizes, "component_id").select(
         "doc_id", "component_id", "n_members"
@@ -877,17 +918,10 @@ def star_components(pairs: DataFrame, max_iters: int = STAR_MAX_ITERS) -> DataFr
     canon = (
         pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
 
-    def _sig(e: DataFrame):
-        r = e.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("src").alias("s"), F.sum("dst").alias("d")
-        ).first()
-        return (r["n"], r["s"], r["d"])
-
-    prev = _sig(canon)
-    for _ in range(max_iters):
+    def step(canon: DataFrame) -> DataFrame:
         adj = canon.unionByName(
             canon.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
@@ -914,22 +948,21 @@ def star_components(pairs: DataFrame, max_iters: int = STAR_MAX_ITERS) -> DataFr
         )
         smaller = adj2.filter(F.col("dst") < F.col("src"))
         m2 = smaller.groupBy("src").agg(F.min("dst").alias("m"))
-        canon = (
+        return (
             smaller.join(m2, "src")
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
             .filter(F.col("src") != F.col("dst"))
             .unionByName(m2.select("src", F.col("m").alias("dst")))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        cur = _sig(canon)
-        if cur == prev:  # star fixpoint: every edge is (node, component min)
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"star CC did not converge in {max_iters} alternations"
-        )
+
+    def sig(e: DataFrame) -> tuple:
+        r = e.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("src").alias("s"), F.sum("dst").alias("d")
+        ).first()
+        return (r["n"], r["s"], r["d"])
+
+    canon, _ = fixpoint(canon, step, sig, max_iters, "star connected components")
     comp = canon.select(F.col("src").alias("doc_id"), F.col("dst").alias("component_id"))
     roots = canon.select(F.col("dst").alias("doc_id")).distinct().select(
         "doc_id", F.col("doc_id").alias("component_id")
@@ -1964,10 +1997,12 @@ KCORE_K = 2
 KCORE_ROUNDS = 4
 
 
-def _kcore_oracle() -> str:
+def _kcore_oracle(n_rounds: int) -> str:
+    """DuckDB twin of ``n_rounds`` synchronous peel rounds, unrolled as
+    MATERIALIZED CTEs (inlining would exponentiate the round tree)."""
     rounds = []
     prev_e = "edges"
-    for t in range(1, KCORE_ROUNDS + 1):
+    for t in range(1, n_rounds + 1):
         rounds.append(f"""
     d{t} AS MATERIALIZED (SELECT src AS doc_id, CAST(count(*) AS BIGINT) AS deg
              FROM {prev_e} GROUP BY src),
@@ -1993,7 +2028,7 @@ def _kcore_oracle() -> str:
     ),
     {','.join(rounds)}
     SELECT src AS doc_id, CAST(count(*) AS BIGINT) AS core_deg
-    FROM e{KCORE_ROUNDS}
+    FROM e{n_rounds}
     GROUP BY src
     ORDER BY core_deg DESC, doc_id ASC
     """
@@ -2001,7 +2036,7 @@ def _kcore_oracle() -> str:
 
 @register(
     "graph_kcore_peel",
-    oracle=_kcore_oracle(),
+    oracle=_kcore_oracle(KCORE_ROUNDS),
     doc=f"k-core decomposition ({KCORE_ROUNDS} synchronous peeling "
     f"rounds at k={KCORE_K}) on the MinHash-LSH similarity graph — the "
     "fourth graph analytic next to components / PageRank / LPA: "
@@ -2023,7 +2058,11 @@ def _kcore_oracle() -> str:
     "few rounds — the bounded form here is the certified inner body.",
 )
 def q_graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = kcore_peel(_symmetric_edges(_lsh_candidate_pairs(spark, sf_dir)))
+    return _core_deg(kcore_peel(_symmetric_edges(_lsh_candidate_pairs(spark, sf_dir))))
+
+
+def _core_deg(e: DataFrame) -> DataFrame:
+    """Per-node degree inside the peeled core, densest first."""
     return (
         e.groupBy(F.col("src").alias("doc_id"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("core_deg"))
@@ -2031,111 +2070,64 @@ def q_graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _peel_round(e: DataFrame, k: int) -> DataFrame:
+    """One synchronous peel: drop every edge with an endpoint whose
+    current degree is below k — see the graph_kcore_peel catalog doc
+    for the scale shape."""
+    keep = (
+        e.groupBy("src")
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .where(F.col("deg") >= k)
+        .select(F.col("src").alias("keep_id"))
+    )
+    return e.join(keep, e["src"] == keep["keep_id"], "left_semi").join(
+        keep, e["dst"] == keep["keep_id"], "left_semi"
+    )
+
+
 def kcore_peel(
     edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS
 ) -> DataFrame:
-    """The bounded peeling loop on a symmetric (src, dst) edge list —
-    see q_graph_kcore_peel's docstring for the round body's scale
-    shape."""
+    """The bounded peeling loop on a symmetric (src, dst) edge list,
+    each round's lineage cut by a lazy localCheckpoint."""
     e = edges
     for _ in range(rounds):
-        keep = (
-            e.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .where(F.col("deg") >= k)
-            .select(F.col("src").alias("keep_id"))
-        )
-        e = (
-            e.join(keep, e["src"] == keep["keep_id"], "left_semi")
-            .join(keep, e["dst"] == keep["keep_id"], "left_semi")
-            .localCheckpoint(eager=False)
-        )
+        e = _peel_round(e, k).localCheckpoint(eager=False)
     return e
 
 
 KCORE_FIXPOINT_MAX_ROUNDS = 64
 # oracle unroll depth: rounds past convergence are no-ops at the
 # fixpoint, so the unrolled oracle equals the true k-core whenever the
-# graph converges within this many rounds — tests/test_dedup.py asserts
-# convergence well inside it at sf0.001, and the run-to-convergence loop
-# raises rather than return a non-fixpoint if the cap is ever hit
+# graph converges within this many rounds —
+# tests/test_round10_operators.py asserts convergence well inside it at
+# sf0.001, and fixpoint() raises rather than return a non-fixpoint if
+# the live graph ever needs more
 KCORE_FIXPOINT_ORACLE_ROUNDS = 8
 
 
 def kcore_fixpoint(
     edges: DataFrame, k: int = KCORE_K, max_rounds: int = KCORE_FIXPOINT_MAX_ROUNDS
 ) -> tuple[DataFrame, int]:
-    """Run-to-convergence k-core on a symmetric edge list: loop the
-    certified peel round body until an edge-count probe stops moving.
-    The probe is sound because peeling only ever DELETES edges — an
-    unchanged count means no node fell below k, i.e. the fixpoint.
-    Each round ends in a lazy localCheckpoint whose materializing
-    action IS the probe (one job per round, lineage truncated every
-    round — the CC pattern at dedup.py:775); at 100 TB swap in durable
-    checkpoints. Returns (converged edges, rounds executed)."""
-    e = edges
-    prev = e.count()
-    for rounds_run in range(1, max_rounds + 1):
-        keep = (
-            e.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .where(F.col("deg") >= k)
-            .select(F.col("src").alias("keep_id"))
-        )
-        e = (
-            e.join(keep, e["src"] == keep["keep_id"], "left_semi")
-            .join(keep, e["dst"] == keep["keep_id"], "left_semi")
-            .localCheckpoint(eager=False)
-        )
-        n = e.count()
-        if n == prev:
-            return e, rounds_run
-        prev = n
-    raise RuntimeError(
-        f"k-core did not converge in {max_rounds} rounds — raise "
-        "KCORE_FIXPOINT_MAX_ROUNDS (each round strictly shrinks the "
-        "edge set, so the node count bounds the rounds needed)"
+    """Run-to-convergence k-core on a symmetric edge list: the peel
+    round under ``fixpoint`` with an edge-count probe. The probe is
+    sound because peeling only ever DELETES edges — an unchanged count
+    means no node fell below k, i.e. the fixpoint. Raises once more
+    rounds change than the catalog twin unrolls. Returns (converged
+    edges, rounds executed)."""
+    return fixpoint(
+        edges,
+        lambda e: _peel_round(e, k),
+        DataFrame.count,
+        max_rounds,
+        "k-core",
+        KCORE_FIXPOINT_ORACLE_ROUNDS,
     )
-
-
-def _kcore_fixpoint_oracle() -> str:
-    rounds = []
-    prev_e = "edges"
-    for t in range(1, KCORE_FIXPOINT_ORACLE_ROUNDS + 1):
-        rounds.append(f"""
-    d{t} AS MATERIALIZED (SELECT src AS doc_id, CAST(count(*) AS BIGINT) AS deg
-             FROM {prev_e} GROUP BY src),
-    k{t} AS MATERIALIZED (SELECT doc_id FROM d{t} WHERE deg >= {KCORE_K}),
-    e{t} AS MATERIALIZED (
-      SELECT e.src, e.dst FROM {prev_e} e
-      JOIN k{t} a ON a.doc_id = e.src
-      JOIN k{t} b ON b.doc_id = e.dst
-    )""")
-        prev_e = f"e{t}"
-    return f"""
-    WITH {_SIGS_CTE},
-    bands AS (SELECT doc_id, unnest({_BANDS_SQL}) AS band_key FROM sigs),
-    pairs AS (
-      SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      FROM bands x JOIN bands y
-        ON x.band_key = y.band_key AND x.doc_id < y.doc_id
-    ),
-    edges AS MATERIALIZED (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL
-      SELECT doc_b, doc_a FROM pairs
-    ),
-    {','.join(rounds)}
-    SELECT src AS doc_id, CAST(count(*) AS BIGINT) AS core_deg
-    FROM e{KCORE_FIXPOINT_ORACLE_ROUNDS}
-    GROUP BY src
-    ORDER BY core_deg DESC, doc_id ASC
-    """
 
 
 @register(
     "graph_kcore_fixpoint",
-    oracle=_kcore_fixpoint_oracle(),
+    oracle=_kcore_oracle(KCORE_FIXPOINT_ORACLE_ROUNDS),
     doc=f"The RUN-TO-CONVERGENCE twin of graph_kcore_peel (k={KCORE_K}): "
     "a user asking for 'the k-core' gets the true fixpoint, not a "
     "bounded-round approximation — the loop peels until an edge-count "
@@ -2155,25 +2147,8 @@ def _kcore_fixpoint_oracle() -> str:
     "localCheckpoint swaps for durable checkpoints.",
 )
 def q_graph_kcore_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e, rounds_run = kcore_fixpoint(
-        _symmetric_edges(_lsh_candidate_pairs(spark, sf_dir))
-    )
-    # oracle-coupling guard (at EVERY SF, not just the sf0.001 pytest):
-    # convergence at round r means r-1 rounds actually changed the edge
-    # set; the unrolled oracle equals the true k-core only when that
-    # depth fits inside its unroll. Raise the diagnosable error rather
-    # than let a deeper graph surface as a bare parity hash mismatch.
-    if rounds_run - 1 > KCORE_FIXPOINT_ORACLE_ROUNDS:
-        raise RuntimeError(
-            f"k-core needed {rounds_run - 1} changing rounds but the DuckDB "
-            f"oracle unrolls only {KCORE_FIXPOINT_ORACLE_ROUNDS} — raise "
-            "KCORE_FIXPOINT_ORACLE_ROUNDS to keep parity sound"
-        )
-    return (
-        e.groupBy(F.col("src").alias("doc_id"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("core_deg"))
-        .orderBy(F.col("core_deg").desc(), F.col("doc_id").asc())
-    )
+    e, _ = kcore_fixpoint(_symmetric_edges(_lsh_candidate_pairs(spark, sf_dir)))
+    return _core_deg(e)
 
 
 LP_NEIGHBOR_CAP = 32
@@ -2386,7 +2361,8 @@ SUBSTR_GRAM_LEN = 30
 def q_dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parallel loader: the 30x gram explode + substring kernel sits
     # directly on the scan, and the bench parquet is single-row-group —
-    # adopted per the interleaved A/B discipline (tools/ab_scan.py,
+    # adopted per the interleaved A/B discipline (tools/ab_scan.py, last
+    # present at commit 8b08e99;
     # round 12: plain 8.07 s -> parallel 1.18 s at sf0.1, ratio 0.146)
     docs = load_table_parallel(spark, sf_dir, "documents").select("doc_id", "text")
     return substring_dup_spans(docs, SUBSTR_GRAM_LEN)

@@ -4481,6 +4481,8 @@ across sf0.001-sf1) it never binds."""
     "identical fixpoint as a recursive min-label closure.",
 )
 def q_entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .dedup import min_label_components
+
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_name", "p_brand")
     # Exact-dup collapse BEFORE the fuzzy quadratic (the standard MDM
     # trick): levenshtein only ever sees DISTINCT (brand, name) pairs,
@@ -4536,41 +4538,9 @@ def q_entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = cross.unionByName(
         cross.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=True)
-    labels = (
-        edges.groupBy(F.col("src").alias("rep"))
-        .agg(F.min("dst").alias("mn"))
-        .select("rep", F.least(F.col("rep"), F.col("mn")).alias("label"))
-        .localCheckpoint(eager=False)
-    )
-    prev_sum = labels.agg(F.sum("label")).first()[0]
-    converged = prev_sum is None  # no fuzzy edges at all -> trivially done
-    for _ in range(8):
-        if converged:
-            break
-        prop = edges.join(labels, edges.src == labels.rep).select(
-            F.col("dst").alias("rep"), "label"
-        )
-        labels = (
-            labels.unionByName(prop)
-            .groupBy("rep")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
-        )
-        new_sum = labels.agg(F.sum("label")).first()[0]
-        if new_sum == prev_sum:  # labels only decrease -> fixpoint
-            converged = True
-            break
-        prev_sum = new_sum
-    if not converged:
-        # fail LOUDLY rather than ship partial clusters: a match
-        # component deeper than 8 hops would silently diverge from the
-        # oracle's full transitive closure (same contract as the CC
-        # loop's divergence guard)
-        raise RuntimeError(
-            "entity_resolution_clusters: min-label propagation did not "
-            "reach a fixpoint within 8 rounds — raise the round budget "
-            "or switch to the star-contraction path for this graph"
-        )
+    # hash-min rounds budget: a match component deeper than 8 hops
+    # raises rather than ship clusters short of the oracle's closure
+    labels = min_label_components(edges, 8).withColumnRenamed("node", "rep")
     # exact-duplicate groups (|ks| >= 2) with no fuzzy neighbor are
     # their own component; singleton names with no match emit no row
     dup_only = (
@@ -5092,7 +5062,8 @@ def q_dau_wau_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "top-k are already partial-combined and WindowGroupLimit-pruned. "
     "Round-12 sf1 re-run (the growth exponent rises 0.45->0.70/decade, "
     "so the tournament was re-held ON the tiled sf1 dir per the "
-    "round-11 verdict; tools/ab_copurchase_sf1.py, interleaved medians "
+    "round-11 verdict; tools/ab_copurchase_sf1.py, last present at "
+    "commit 8b08e99; interleaved medians "
     "of 3): base 22.52 s, basket collect_set 1.003x, broadcast capped "
     "pair table 1.017x, shared custkey exchange 1.075x — the sf0.1 "
     "verdicts HOLD at sf1; no variant beats the keyed base plan. The "

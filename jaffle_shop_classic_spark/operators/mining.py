@@ -1497,6 +1497,16 @@ def q_decay_weighted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "convergence guard of dedup_cluster_components.",
 )
 def q_graph_minplus_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e, cur = _minplus_graph(spark, sf_dir)
+    for _ in range(KHOP_DEPTH):
+        cur = _relax_round(e, cur)
+    return _by_distance(cur)
+
+
+def _minplus_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Symmetric co-purchase edges (s, t, w = 101 - min(support, 100)),
+    lazily checkpointed, and the seed frontier: the smallest node at
+    distance 0."""
     p = _copurchase_pairs(spark, sf_dir, KHOP_MIN_SUPPORT).select(
         "pa",
         "pb",
@@ -1506,21 +1516,25 @@ def q_graph_minplus_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pa").alias("s"), F.col("pb").alias("t"), "w"
     ).unionAll(p.select(F.col("pb").alias("s"), F.col("pa").alias("t"), "w"))
     e = e.localCheckpoint(eager=False)
-    cur = e.agg(F.min("s").alias("node")).select(
+    seed = e.agg(F.min("s").alias("node")).select(
         "node", F.lit(0).cast("bigint").alias("dist")
     )
-    for _ in range(KHOP_DEPTH):
-        relaxed = (
-            e.join(cur.hint("broadcast"), e["s"] == cur["node"])
-            .select(F.col("t").alias("node"), (cur["dist"] + e["w"]).alias("dist"))
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-        )
-        cur = (
-            relaxed.unionAll(cur)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-        )
+    return e, seed
+
+
+def _relax_round(e: DataFrame, cur: DataFrame) -> DataFrame:
+    """One Bellman-Ford round: broadcast the (node, dist) frontier into
+    the edges, take the min-plus product, keep min(new, old) per node."""
+    relaxed = (
+        e.join(cur.hint("broadcast"), e["s"] == cur["node"])
+        .select(F.col("t").alias("node"), (cur["dist"] + e["w"]).alias("dist"))
+        .groupBy("node")
+        .agg(F.min("dist").alias("dist"))
+    )
+    return relaxed.unionAll(cur).groupBy("node").agg(F.min("dist").alias("dist"))
+
+
+def _by_distance(cur: DataFrame) -> DataFrame:
     return cur.select("node", F.col("dist").cast("bigint").alias("dist")).orderBy(
         F.col("dist").asc(), F.col("node").asc()
     )
@@ -3900,60 +3914,25 @@ def _minplus_fixpoint_oracle() -> str:
     "formulation.",
 )
 def q_graph_minplus_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _copurchase_pairs(spark, sf_dir, KHOP_MIN_SUPPORT).select(
-        "pa",
-        "pb",
-        (101 - F.least(F.col("cnt"), F.lit(100))).cast("bigint").alias("w"),
+    from .dedup import fixpoint
+
+    def probe(cur: DataFrame) -> tuple:
+        row = cur.agg(F.count(F.lit(1)).alias("n"), F.sum("dist").alias("s")).first()
+        return (row["n"], row["s"])
+
+    e, seed = _minplus_graph(spark, sf_dir)
+    # the loop starts from the first relaxation (the 1-row seed's probe
+    # would cost jobs of its own), i.e. from the twin's d1, which leaves
+    # the twin one round less of unroll for the loop
+    cur, _ = fixpoint(
+        _relax_round(e, seed).localCheckpoint(eager=False),
+        lambda cur: _relax_round(e, cur),
+        probe,
+        MINPLUS_FIXPOINT_MAX_ROUNDS,
+        "min-plus shortest paths",
+        MINPLUS_FIXPOINT_ORACLE_ROUNDS - 1,
     )
-    e = p.select(
-        F.col("pa").alias("s"), F.col("pb").alias("t"), "w"
-    ).unionAll(p.select(F.col("pb").alias("s"), F.col("pa").alias("t"), "w"))
-    e = e.localCheckpoint(eager=False)
-    cur = e.agg(F.min("s").alias("node")).select(
-        "node", F.lit(0).cast("bigint").alias("dist")
-    )
-    prev_probe = (1, 0)
-    changed_rounds = 0
-    for _ in range(MINPLUS_FIXPOINT_MAX_ROUNDS):
-        relaxed = (
-            e.join(cur.hint("broadcast"), e["s"] == cur["node"])
-            .select(F.col("t").alias("node"), (cur["dist"] + e["w"]).alias("dist"))
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-        )
-        cur = (
-            relaxed.unionAll(cur)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        row = cur.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("dist").alias("s")
-        ).first()
-        probe = (row["n"], row["s"])
-        if probe == prev_probe:
-            # oracle-coupling guard: the DuckDB twin unrolls a FIXED
-            # number of rounds, so a graph whose shortest-path depth
-            # exceeds the unroll would put the oracle at a non-fixpoint
-            # and fail parity with a bare hash mismatch. Raise the
-            # diagnosable error instead, at EVERY SF this runs at.
-            if changed_rounds > MINPLUS_FIXPOINT_ORACLE_ROUNDS:
-                raise RuntimeError(
-                    f"min-plus converged in {changed_rounds} rounds but the "
-                    f"DuckDB oracle unrolls only "
-                    f"{MINPLUS_FIXPOINT_ORACLE_ROUNDS} — raise "
-                    "MINPLUS_FIXPOINT_ORACLE_ROUNDS to keep parity sound"
-                )
-            return cur.select(
-                "node", F.col("dist").cast("bigint").alias("dist")
-            ).orderBy(F.col("dist").asc(), F.col("node").asc())
-        prev_probe = probe
-        changed_rounds += 1
-    raise RuntimeError(
-        f"min-plus did not converge in {MINPLUS_FIXPOINT_MAX_ROUNDS} rounds — "
-        "raise MINPLUS_FIXPOINT_MAX_ROUNDS (positive weights guarantee "
-        "convergence within the node count)"
-    )
+    return _by_distance(cur)
 
 
 KMV_K = 256
@@ -6089,7 +6068,7 @@ def q_ab_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(sum(CAST(x AS HUGEINT) * y) AS DOUBLE) AS sxy
       FROM stacked
     )
-    SELECT m2 / 2 AS n_edges,
+    SELECT m2 // 2 AS n_edges,
            round((sxy - CAST(sx AS DOUBLE) * sx / m2)
                  / (sxx - CAST(sx AS DOUBLE) * sx / m2), 6) + 0
              AS assortativity
@@ -6160,10 +6139,13 @@ def q_graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return mom.select(
         (F.col("m2") / 2).cast("bigint").alias("n_edges"),
-        F.round(
-            (F.col("sxy") - F.col("sx").cast("double") * F.col("sx") / F.col("m2"))
-            / (F.col("sxx") - F.col("sx").cast("double") * F.col("sx") / F.col("m2")),
-            6,
+        (
+            F.round(
+                (F.col("sxy") - F.col("sx").cast("double") * F.col("sx") / F.col("m2"))
+                / (F.col("sxx") - F.col("sx").cast("double") * F.col("sx") / F.col("m2")),
+                6,
+            )
+            + F.lit(0)  # -0.0 -> 0.0, as the twin's `+ 0`
         ).alias("assortativity"),
     )
 

@@ -70,7 +70,8 @@ def load_table_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFram
     first stage is a cheap filter/project feeding a shuffle — measured
     regressions there (corpus_token_ids, cf_item_cosine,
     lang_nb_classifier, text_heavy_hitters_mg stay on plain
-    load_table). Round-10 heavy-tier audit (tools/ab_scan.py,
+    load_table). Round-10 heavy-tier audit (tools/ab_scan.py, last
+    present at commit 8b08e99;
     interleaved medians at sf0.1): ADOPTED sim_pairs_blocked (0.19x),
     sim_ml_lsh_bucketed (0.25x) — per-pair vector math on the scan —
     and table_stats_profile (0.36x, multi-distinct expand on the

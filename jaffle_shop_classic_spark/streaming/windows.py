@@ -314,6 +314,11 @@ def dedup_within_watermark(events: DataFrame, watermark: str = "1 hour") -> Data
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
 
 
+STREAM_PART_BYTES = 16 << 20  # source bytes per state partition
+STREAM_MIN_PARTS = 8
+STREAM_MAX_PARTS = 4096
+
+
 def _stream_state_parts(sf_dir: str, source: str = "events.parquet") -> int:
     """Input-size-derived state-partition count for a streaming query.
 
@@ -329,23 +334,22 @@ def _stream_state_parts(sf_dir: str, source: str = "events.parquet") -> int:
     of 3 interleaved). So derive the partition count from the bytes the
     micro-batch will actually carry (guide §2: scale partitioning with
     input size, not a constant tuned for either local mode or the
-    cluster): one partition per SPARK_GRAFT_STREAM_PART_BYTES (default
-    16 MiB) of the stream's source file (``source`` in ``sf_dir``), floor SPARK_GRAFT_STREAM_MIN_PARTS (default
-    8 — the floor is NOT 2 because per-batch compute still parallelizes
+    cluster): one partition per STREAM_PART_BYTES (16 MiB) of the
+    stream's source file (``source`` in ``sf_dir``), floor
+    STREAM_MIN_PARTS (8 — the floor is NOT 2 because per-batch compute still parallelizes
     across these partitions: at sf0.1 the applyInPandasWithState and
     sliding-window aggregations measured 1.7x-2x SLOWER at 2 partitions
     than at 8, their Python-worker / aggregate parallelism being worth
     more than the 6 saved state stores, while the joins gained only
-    ~0.8 s more going 8 -> 2), cap SPARK_GRAFT_STREAM_MAX_PARTS
-    (default 4096). At cluster scale the same dial sizes stores to the
+    ~0.8 s more going 8 -> 2), cap STREAM_MAX_PARTS (4096). At cluster scale the same dial sizes stores to the
     per-trigger volume — state is O(watermark horizon), so the
     bytes-per-partition target, not the core count, is the knob that
     survives a 100 TB stream."""
-    part_bytes = int(os.environ.get("SPARK_GRAFT_STREAM_PART_BYTES", str(16 << 20)))
-    min_parts = int(os.environ.get("SPARK_GRAFT_STREAM_MIN_PARTS", "8"))
-    max_parts = int(os.environ.get("SPARK_GRAFT_STREAM_MAX_PARTS", "4096"))
     size = os.path.getsize(os.path.join(sf_dir, source))
-    return max(min_parts, min(max_parts, (size + part_bytes - 1) // part_bytes))
+    return max(
+        STREAM_MIN_PARTS,
+        min(STREAM_MAX_PARTS, (size + STREAM_PART_BYTES - 1) // STREAM_PART_BYTES),
+    )
 
 
 def run_stream_to_batch(

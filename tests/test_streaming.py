@@ -841,13 +841,13 @@ def test_stream_pending_generation_requires_matching_checkpoint(spark, tmp_path)
 
 def test_stream_state_parts_derivation_and_restore(spark, sf_dir, monkeypatch):
     """r16: streaming state-partition count derives from the source file
-    size (one partition per SPARK_GRAFT_STREAM_PART_BYTES, floor
-    SPARK_GRAFT_STREAM_MIN_PARTS = 8 by default, cap
-    SPARK_GRAFT_STREAM_MAX_PARTS) — decoupled from the core-count-
-    coupled session default — and the session's shuffle-partition conf
-    is restored after the drain."""
+    size (one partition per STREAM_PART_BYTES, floor STREAM_MIN_PARTS =
+    8, cap STREAM_MAX_PARTS) — decoupled from the core-count-coupled
+    session default — and the session's shuffle-partition conf is
+    restored after the drain."""
     import os
 
+    from jaffle_shop_classic_spark.streaming import windows
     from jaffle_shop_classic_spark.streaming.windows import (
         _drain,
         _stream_state_parts,
@@ -857,19 +857,17 @@ def test_stream_state_parts_derivation_and_restore(spark, sf_dir, monkeypatch):
     # floor: a small file never drops below the compute-parallelism
     # floor (8 by default — per-batch Python/aggregate work still
     # parallelizes across state partitions)
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PART_BYTES", str(size * 10))
+    monkeypatch.setattr(windows, "STREAM_PART_BYTES", size * 10)
     assert _stream_state_parts(sf_dir) == 8
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_MIN_PARTS", "2")
+    monkeypatch.setattr(windows, "STREAM_MIN_PARTS", 2)
     assert _stream_state_parts(sf_dir) == 2
     # proportional: ceil(size / target) once above the floor
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PART_BYTES", str(max(1, size // 20)))
+    monkeypatch.setattr(windows, "STREAM_PART_BYTES", max(1, size // 20))
     assert _stream_state_parts(sf_dir) == -(-size // max(1, size // 20))
     # cap wins over the derived count
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_MAX_PARTS", "3")
+    monkeypatch.setattr(windows, "STREAM_MAX_PARTS", 3)
     assert _stream_state_parts(sf_dir) == 3
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PART_BYTES")
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_MIN_PARTS")
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_MAX_PARTS")
+    monkeypatch.undo()
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
     out = _drain(
