@@ -9,12 +9,16 @@ timestamp semantics so results compare exactly against the DuckDB oracle
 ``run_concurrently`` overlaps independent Spark actions on a few Python
 threads: at small scale an action is mostly fixed scheduling cost, so
 independent ones are cheaper side by side than in a row.
+
+``pinned_conf`` sets session confs for the length of a block and puts
+them back as they were on every exit path.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Mapping, Sequence
+from contextlib import contextmanager
 from concurrent.futures import ThreadPoolExecutor
 from typing import TypeVar
 
@@ -75,3 +79,21 @@ def run_concurrently(spark: SparkSession, fns: Sequence[Callable[[], T]]) -> lis
     with ThreadPoolExecutor(max_workers=workers) as pool:
         futures = [pool.submit(inheritable_thread_target(spark)(fn)) for fn in fns]
     return [f.result() for f in futures]
+
+
+@contextmanager
+def pinned_conf(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set each of ``confs`` on the session for the block, then restore
+    every key as it was before: its old value, or unset if it was unset.
+    The restore runs however the block exits, exceptions included."""
+    saved = {key: spark.conf.get(key, None) for key in confs}
+    try:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in saved.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)

@@ -24,9 +24,24 @@ import tempfile
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from jaffle_shop_classic_spark.operators.catalog import register
+from jaffle_shop_classic_spark.session import pinned_conf
 from jaffle_shop_classic_spark.sources.parquet import normalize_events_ts
+
+_SCHEMA_CACHE: dict[tuple[str, str, str], StructType] = {}
+
+
+def _file_schema(spark: SparkSession, sf_dir: str, file: str) -> StructType:
+    """Footer schema of ``file`` in ``sf_dir``, read once per
+    (application, sf_dir, file) — the key sources.parquet's table cache
+    uses — since every drain re-reads it and a read costs ~0.1 s warm."""
+    key = (spark.sparkContext.applicationId, sf_dir, file)
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        schema = _SCHEMA_CACHE[key] = spark.read.parquet(f"{sf_dir}/{file}").schema
+    return schema
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -40,7 +55,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream byte-identical to the batch surface the oracles certify.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = _file_schema(spark, sf_dir, "events.parquet")
     # the file source requires a *directory*; select just events.parquet
     # out of the shared sf_dir via a glob filter
     raw = (
@@ -245,9 +260,8 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer peek, like stream_events). The corpus has no ingest
     timestamp, so a deterministic one is derived from doc_id (1 doc/sec
     arrival clock) — the stand-in for the pipeline's real ingest time."""
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     raw = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(_file_schema(spark, sf_dir, "documents.parquet"))
         .format("parquet")
         .option("pathGlobFilter", "documents.parquet")
         .load(sf_dir)
@@ -317,44 +331,45 @@ def dedup_within_watermark(events: DataFrame, watermark: str = "1 hour") -> Data
 STREAM_PART_BYTES = 16 << 20  # source bytes per state partition
 STREAM_MIN_PARTS = 8
 STREAM_MAX_PARTS = 4096
+NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
-def _stream_state_parts(sf_dir: str, source: str = "events.parquet") -> int:
-    """Input-size-derived state-partition count for a streaming query.
+def _stream_state_parts(
+    spark: SparkSession, sf_dir: str, source: str = "events.parquet"
+) -> int:
+    """State-partition count for a streaming query: one partition per
+    STREAM_PART_BYTES (16 MiB) of its ``source`` file in ``sf_dir``,
+    capped at STREAM_MAX_PARTS (4096), with a floor of
+    min(STREAM_MIN_PARTS, defaultParallelism) — 8, or the task-slot
+    count when there are fewer slots.
 
-    Every stateful streaming operator keeps ONE state store per shuffle
+    Every stateful streaming operator keeps one state store per shuffle
     partition, and each store pays a fixed per-micro-batch cost
-    (snapshot/delta file writes, maintenance, commit) that is
-    independent of how much state it holds. Inheriting the session's
-    core-count-coupled `spark.sql.shuffle.partitions` therefore couples
-    that fixed cost to the machine, not the data: measured at sf0.1
-    (events.parquet = 2.0 MB) on the same 32-core session, the interval
-    join runs 12.1 s with 32 state partitions, 3.97 s with 8 and 3.18 s
-    with 2; the left-outer join 16.3 / 3.5 / 2.6 s (r16 probe, medians
-    of 3 interleaved). So derive the partition count from the bytes the
-    micro-batch will actually carry (guide §2: scale partitioning with
-    input size, not a constant tuned for either local mode or the
-    cluster): one partition per STREAM_PART_BYTES (16 MiB) of the
-    stream's source file (``source`` in ``sf_dir``), floor
-    STREAM_MIN_PARTS (8 — the floor is NOT 2 because per-batch compute still parallelizes
-    across these partitions: at sf0.1 the applyInPandasWithState and
-    sliding-window aggregations measured 1.7x-2x SLOWER at 2 partitions
-    than at 8, their Python-worker / aggregate parallelism being worth
-    more than the 6 saved state stores, while the joins gained only
-    ~0.8 s more going 8 -> 2), cap STREAM_MAX_PARTS (4096). At cluster scale the same dial sizes stores to the
-    per-trigger volume — state is O(watermark horizon), so the
-    bytes-per-partition target, not the core count, is the knob that
-    survives a 100 TB stream."""
+    (snapshot/delta write, maintenance, commit) however little state it
+    holds. So the count follows the bytes a micro-batch carries, not the
+    core count the session's `spark.sql.shuffle.partitions` follows: on
+    one 32-core session at sf0.1 the interval join ran 12.1 / 3.97 /
+    3.18 s at 32 / 8 / 2 partitions (r16). At cluster scale state is
+    O(watermark horizon), so bytes per partition is the knob that holds.
+
+    The floor lets per-batch compute (Python stateful kernels, window
+    aggregates), which runs one task per state partition, spread over
+    up to 8 task slots. It goes no higher than the slot count because a partition
+    beyond it runs in a second wave of tasks: another round of
+    per-store commits and no more parallelism. On 4 cores floor 4 beat
+    8 on every entry measured, and floor 2 slowed the two pandas
+    entries (SCALING.md, round-16 section)."""
     size = os.path.getsize(os.path.join(sf_dir, source))
+    floor = min(STREAM_MIN_PARTS, spark.sparkContext.defaultParallelism)
     return max(
-        STREAM_MIN_PARTS,
+        floor,
         min(STREAM_MAX_PARTS, (size + STREAM_PART_BYTES - 1) // STREAM_PART_BYTES),
     )
 
 
 def run_stream_to_batch(
     streaming_df: DataFrame, name: str, output_mode: str = "append",
-    state_parts: int | None = None,
+    state_parts: int | None = None, emits_on_watermark: bool = True,
 ) -> DataFrame:
     """Drive a streaming query over the available data to completion and
     return the result as a batch DataFrame.
@@ -371,43 +386,48 @@ def run_stream_to_batch(
     update-mode entry here emits O(distinct keys) aggregate rows, not
     O(stream) rows.
 
-    `state_parts` (r16): pins `spark.sql.shuffle.partitions` — which a
-    streaming query captures at start as its immutable state-store
-    partition count — for the duration of the drain, restoring the
-    session value afterwards (the drain is synchronous, so no other
-    query observes the change)."""
+    Two session confs are pinned for the drain (it is synchronous, so no
+    other query sees them) and restored on every exit path:
+    `state_parts` sets `spark.sql.shuffle.partitions`, which a streaming
+    query captures at start as its state-store partition count; and
+    `emits_on_watermark=False` turns off Spark's trailing no-data
+    micro-batch. That batch only advances the watermark: it closes
+    windows, sessions and outer-join rows, but a query whose rows leave
+    as they arrive (inner join, dedup, update-mode state, stream-static
+    join) emits nothing in it and pays one more round of state commits."""
     spark = streaming_df.sparkSession
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    confs = {}
+    if state_parts is not None:
+        confs["spark.sql.shuffle.partitions"] = str(state_parts)
+    if not emits_on_watermark:
+        confs[NO_DATA_BATCHES] = "false"
     q = None
-    try:
-        # pinned inside the try: a failed start restores it too
-        if state_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
-        if output_mode == "append":
-            out_dir = tempfile.mkdtemp(prefix=f"{name}-")
-            _SINK_DIRS[name] = out_dir
-            q = (
-                streaming_df.writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-        else:
-            out_dir = None
-            q = (
-                streaming_df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-        finished = q.awaitTermination(timeout=120)
-    finally:
-        if q is not None and q.isActive:  # pragma: no cover — safety net
-            q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
+    with pinned_conf(spark, confs):
+        try:
+            if output_mode == "append":
+                out_dir = tempfile.mkdtemp(prefix=f"{name}-")
+                _SINK_DIRS[name] = out_dir
+                q = (
+                    streaming_df.writeStream.format("parquet")
+                    .option("path", out_dir)
+                    .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
+                    .outputMode("append")
+                    .trigger(availableNow=True)
+                    .start()
+                )
+            else:
+                out_dir = None
+                q = (
+                    streaming_df.writeStream.format("memory")
+                    .queryName(name)
+                    .outputMode(output_mode)
+                    .trigger(availableNow=True)
+                    .start()
+                )
+            finished = q.awaitTermination(timeout=120)
+        finally:
+            if q is not None and q.isActive:  # pragma: no cover — safety net
+                q.stop()
     if not finished:  # pragma: no cover — CI-load safety net
         # a silent timeout would hand the caller a PARTIALLY-filled
         # sink that masquerades as a semantics bug downstream
@@ -483,6 +503,7 @@ _SINK_DIRS: dict[str, str] = {}  # sink name -> file-sink scratch dir
 def _drain(
     df: DataFrame, base: str, output_mode: str = "append",
     sf_dir: str | None = None, source: str = "events.parquet",
+    emits_on_watermark: bool = True,
 ) -> DataFrame:
     """Unique sink name per call so re-runs don't collide; the PREVIOUS
     generation's sink for the same base is dropped (memory-sink temp
@@ -490,7 +511,9 @@ def _drain(
     don't pin every past result set in driver memory or scratch disk.
     When `sf_dir` is given the drain runs under the state-partition
     count derived from the size of its `source` file there (see
-    _stream_state_parts)."""
+    _stream_state_parts). An entry whose output leaves on arrival
+    declares `emits_on_watermark=False` and skips the trailing no-data
+    micro-batch (see run_stream_to_batch)."""
     name = f"{base}_{next(_SINK_SEQ)}"
     stale = _LAST_SINK.get(base)
     if stale is not None:
@@ -499,8 +522,12 @@ def _drain(
         if stale_dir is not None:
             shutil.rmtree(stale_dir, ignore_errors=True)
     _LAST_SINK[base] = name
-    parts = _stream_state_parts(sf_dir, source) if sf_dir is not None else None
-    return run_stream_to_batch(df, name, output_mode, state_parts=parts)
+    parts = (
+        _stream_state_parts(df.sparkSession, sf_dir, source) if sf_dir is not None else None
+    )
+    return run_stream_to_batch(
+        df, name, output_mode, state_parts=parts, emits_on_watermark=emits_on_watermark
+    )
 
 
 @register(
@@ -600,7 +627,10 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = stream_events(spark, sf_dir)
     views = ev.filter(F.col("event_type") == "view")
     purchases = stream_events(spark, sf_dir).filter(F.col("event_type") == "purchase")
-    return _drain(interval_join_streams(views, purchases), "stream_ij", sf_dir=sf_dir)
+    return _drain(
+        interval_join_streams(views, purchases), "stream_ij",
+        sf_dir=sf_dir, emits_on_watermark=False,
+    )
 
 
 @register(
@@ -793,7 +823,7 @@ def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = dedup_within_watermark(stream_events(spark, sf_dir)).select("event_id")
-    return _drain(deduped, "stream_dedup", sf_dir=sf_dir)
+    return _drain(deduped, "stream_dedup", sf_dir=sf_dir, emits_on_watermark=False)
 
 
 @register(
@@ -832,7 +862,10 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_neardup_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = neardup_dedup_stream(stream_documents(spark, sf_dir)).select("simhash")
-    return _drain(deduped, "stream_neardup", sf_dir=sf_dir, source="documents.parquet")
+    return _drain(
+        deduped, "stream_neardup",
+        sf_dir=sf_dir, source="documents.parquet", emits_on_watermark=False,
+    )
 
 
 @register(
@@ -860,6 +893,7 @@ def q_stream_running_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stream_running_stats",
         output_mode="update",
         sf_dir=sf_dir,
+        emits_on_watermark=False,
     )
 
 
@@ -892,6 +926,7 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         enrich_with_static_dim(stream_events(spark, sf_dir), dim),
         "stream_static_enrich",
         sf_dir=sf_dir,
+        emits_on_watermark=False,
     )
 
 
@@ -1074,4 +1109,5 @@ def q_stream_ewma_last10(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stream_ewma",
         "update",
         sf_dir=sf_dir,
+        emits_on_watermark=False,
     )

@@ -3,6 +3,7 @@ equivalents on the same data (batch-first design, SURVEY §2.4)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from jaffle_shop_classic_spark.operators.catalog import load_catalog
@@ -10,6 +11,7 @@ from jaffle_shop_classic_spark.sources.parquet import load_table
 from jaffle_shop_classic_spark.streaming import (
     dedup_within_watermark,
     run_stream_to_batch,
+    running_user_stats_stream,
     session_window_stream,
     stream_events,
     tumbling_counts_stream,
@@ -840,12 +842,15 @@ def test_stream_pending_generation_requires_matching_checkpoint(spark, tmp_path)
 
 
 def test_stream_state_parts_derivation_and_restore(spark, sf_dir, monkeypatch):
-    """r16: streaming state-partition count derives from the source file
-    size (one partition per STREAM_PART_BYTES, floor STREAM_MIN_PARTS =
-    8, cap STREAM_MAX_PARTS) — decoupled from the core-count-coupled
-    session default — and the session's shuffle-partition conf is
-    restored after the drain."""
+    """Streaming state-partition count derives from the source file size
+    (one partition per STREAM_PART_BYTES, cap STREAM_MAX_PARTS) with a
+    floor of min(STREAM_MIN_PARTS, defaultParallelism) — decoupled from
+    the core-count-coupled session default, never more than the task
+    slots — and the session's shuffle-partition conf is restored after
+    the drain."""
     import os
+
+    from pyspark import SparkContext
 
     from jaffle_shop_classic_spark.streaming import windows
     from jaffle_shop_classic_spark.streaming.windows import (
@@ -853,20 +858,34 @@ def test_stream_state_parts_derivation_and_restore(spark, sf_dir, monkeypatch):
         _stream_state_parts,
     )
 
+    def slots(n):
+        monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda _: n))
+
     size = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
     # floor: a small file never drops below the compute-parallelism
     # floor (8 by default — per-batch Python/aggregate work still
-    # parallelizes across state partitions)
+    # parallelizes across state partitions) ...
     monkeypatch.setattr(windows, "STREAM_PART_BYTES", size * 10)
-    assert _stream_state_parts(sf_dir) == 8
+    slots(32)
+    assert _stream_state_parts(spark, sf_dir) == 8
+    # ... unless there are fewer task slots than that
+    slots(4)
+    assert _stream_state_parts(spark, sf_dir) == 4
+    slots(1)
+    assert _stream_state_parts(spark, sf_dir) == 1
+    slots(32)
     monkeypatch.setattr(windows, "STREAM_MIN_PARTS", 2)
-    assert _stream_state_parts(sf_dir) == 2
-    # proportional: ceil(size / target) once above the floor
+    assert _stream_state_parts(spark, sf_dir) == 2
+    # proportional: ceil(size / target) once above the floor, whatever
+    # the slot count
     monkeypatch.setattr(windows, "STREAM_PART_BYTES", max(1, size // 20))
-    assert _stream_state_parts(sf_dir) == -(-size // max(1, size // 20))
+    want = -(-size // max(1, size // 20))
+    assert _stream_state_parts(spark, sf_dir) == want
+    slots(4)
+    assert _stream_state_parts(spark, sf_dir) == want
     # cap wins over the derived count
     monkeypatch.setattr(windows, "STREAM_MAX_PARTS", 3)
-    assert _stream_state_parts(sf_dir) == 3
+    assert _stream_state_parts(spark, sf_dir) == 3
     monkeypatch.undo()
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
@@ -878,3 +897,106 @@ def test_stream_state_parts_derivation_and_restore(spark, sf_dir, monkeypatch):
     assert out.count() > 0
     # the drain pinned the derived count only for its own lifetime
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_failed_drain_restores_pinned_confs(spark, sf_dir, monkeypatch):
+    """Both confs a drain pins (state partitions, no-data batches) are
+    back exactly as before when the query's start() raises: a set value
+    keeps its value and an unset key is unset again."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from jaffle_shop_classic_spark.streaming.windows import NO_DATA_BATCHES
+
+    parts = "spark.sql.shuffle.partitions"
+    saved_parts = spark.conf.get(parts)
+    saved_nodata = spark.conf.get(NO_DATA_BATCHES, None)
+    seen = {}
+
+    def failing_start(self, *args, **kwargs):
+        seen.update({k: spark.conf.get(k) for k in (parts, NO_DATA_BATCHES)})
+        raise RuntimeError("start failed")
+
+    monkeypatch.setattr(DataStreamWriter, "start", failing_start)
+    try:
+        for nodata in (None, "true"):
+            if nodata is None:
+                spark.conf.unset(NO_DATA_BATCHES)
+            else:
+                spark.conf.set(NO_DATA_BATCHES, nodata)
+            spark.conf.set(parts, "5")
+            for mode in ("append", "update"):
+                with pytest.raises(RuntimeError, match="start failed"):
+                    run_stream_to_batch(
+                        running_user_stats_stream(stream_events(spark, sf_dir))
+                        if mode == "update"
+                        else dedup_within_watermark(stream_events(spark, sf_dir)),
+                        f"failed_{mode}",
+                        mode,
+                        state_parts=3,
+                        emits_on_watermark=False,
+                    )
+                # pinned while start() ran ...
+                assert seen == {parts: "3", NO_DATA_BATCHES: "false"}
+                # ... and restored exactly after it raised
+                assert spark.conf.get(parts) == "5"
+                assert spark.conf.get(NO_DATA_BATCHES, None) == nodata
+    finally:
+        spark.conf.set(parts, saved_parts)
+        if saved_nodata is None:
+            spark.conf.unset(NO_DATA_BATCHES)
+        else:
+            spark.conf.set(NO_DATA_BATCHES, saved_nodata)
+
+
+ON_ARRIVAL_ENTRIES = [
+    "stream_interval_join",
+    "stream_dedup_watermark",
+    "stream_neardup_dedup",
+    "stream_running_user_stats",
+    "stream_ewma_last10",
+    "stream_static_enrich",
+]
+
+
+@pytest.fixture
+def started_queries(monkeypatch):
+    """Every StreamingQuery started while the test runs, in order."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    started = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        q = start(self, *args, **kwargs)
+        started.append(q)
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    return started
+
+
+def _batch_ids(q) -> set[int]:
+    return {p["batchId"] for p in q.recentProgress}
+
+
+@pytest.mark.parametrize(
+    "name, batches",
+    [(n, {0}) for n in ON_ARRIVAL_ENTRIES] + [("stream_tumbling_counts", {0, 1})],
+)
+def test_drain_micro_batches_match_oracle(spark, sf_dir, started_queries, name, batches):
+    """An entry whose rows leave as they arrive skips Spark's trailing
+    no-data micro-batch (one batch per drain). A watermark entry still
+    runs it: that batch advances the watermark and closes the windows.
+    Either way the drain is non-empty and equals its DuckDB twin."""
+    import duckdb
+
+    from tools.parity import TABLES, compare
+
+    got = load_catalog()[name].fn(spark, sf_dir)
+    assert [_batch_ids(q) for q in started_queries] == [batches]
+    assert got.count() > 0
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    res = compare(name, got, con)
+    assert res["status"] == "MATCH", res
