@@ -6,12 +6,16 @@ order-insensitive multiset of normalized row values. Use while
 iterating so the per-round CORRECTNESS_r{N}.json holds no surprises.
 
 Usage:  python tools/parity.py [sf_dir] [query ...]
+
+Exits 0 when every entry passes, 1 when some fail, and 2 when the driver
+JVM died mid-sweep (reported once, as ``DRIVER_JVM_EXITED``).
 """
 
 from __future__ import annotations
 
 import math
 import os
+import subprocess
 import sys
 import time
 from collections import Counter
@@ -137,6 +141,44 @@ def compare(name: str, spark_df, con) -> dict:
     return out
 
 
+def jvm_exit_code(spark) -> int | None:
+    """The driver JVM's exit status if it exits within a second, else None
+    (also when this process did not launch it). The wait covers a JVM that
+    is dying: its sockets close before it can be reaped."""
+    proc = getattr(spark.sparkContext._gateway, "proc", None)
+    try:
+        return None if proc is None else proc.wait(timeout=1)
+    except subprocess.TimeoutExpired:
+        return None
+
+
+def sweep(spark, con, catalog, names, sf_dir) -> int:
+    """Compare each of ``names``; print one line per entry and a total.
+    Returns 0 when all pass, 1 when some fail, and 2 when the driver JVM
+    died: that is reported once, as ``DRIVER_JVM_EXITED`` with the entry
+    that was running, and the entries after it are not run."""
+    failures = 0
+    for i, name in enumerate(names):
+        try:
+            df = catalog[name].fn(spark, sf_dir)
+            res = compare(name, df, con)
+        except Exception as e:  # surface the first error loudly, keep going
+            code = jvm_exit_code(spark)
+            if code is not None:
+                print("FAIL " + str({
+                    "name": name, "status": "DRIVER_JVM_EXITED", "exit_code": code,
+                    "not_run": len(names) - i - 1, "error": f"{type(e).__name__}: {e}",
+                }), flush=True)
+                print(f"\n{i - failures}/{len(names)} ok; sweep stopped: the driver JVM exited")
+                return 2
+            res = {"name": name, "status": "ERROR", "error": f"{type(e).__name__}: {e}"}
+        ok = res["status"] in ("MATCH", "rows_only")
+        failures += 0 if ok else 1
+        print(("PASS " if ok else "FAIL ") + str(res), flush=True)
+    print(f"\n{len(names) - failures}/{len(names)} ok")
+    return 1 if failures else 0
+
+
 def main(argv: list[str] | None = None) -> int:
     argv = sys.argv[1:] if argv is None else argv
     if argv and not os.path.isdir(argv[0]):
@@ -156,19 +198,7 @@ def main(argv: list[str] | None = None) -> int:
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
-    failures = 0
-    for name in names:
-        try:
-            df = catalog[name].fn(spark, sf_dir)
-            res = compare(name, df, con)
-        except Exception as e:  # surface the first error loudly, keep going
-            res = {"name": name, "status": "ERROR", "error": f"{type(e).__name__}: {e}"}
-        ok = res["status"] in ("MATCH", "rows_only")
-        failures += 0 if ok else 1
-        print(("PASS " if ok else "FAIL ") + str(res), flush=True)
-    print(f"\n{len(names) - failures}/{len(names)} ok")
-    return 1 if failures else 0
+    return sweep(spark, con, catalog, names, sf_dir)
 
 
 if __name__ == "__main__":
