@@ -1,3 +1,3 @@
-from .registry import Project, ModelContext, ModelSpec, model
+from .registry import Project, ModelContext, ModelSpec
 
-__all__ = ["Project", "ModelContext", "ModelSpec", "model"]
+__all__ = ["Project", "ModelContext", "ModelSpec"]

@@ -625,19 +625,3 @@ class Project:
             ts.done(*level)
         # in topological order, as the serial loop built them
         return {name: self._built[name] for name in order if name in self._built}
-
-
-# module-level default project for the jaffle models
-_default_project: Project | None = None
-
-
-def default_project() -> Project:
-    global _default_project
-    if _default_project is None:
-        _default_project = Project()
-    return _default_project
-
-
-def model(**kwargs):
-    """Register on the default project (convenience decorator)."""
-    return default_project().model(**kwargs)

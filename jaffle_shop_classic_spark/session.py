@@ -258,10 +258,14 @@ def _launch(build: Callable[[Mapping[str, str]], SparkSession], driver_memory: s
         return build({})
     archive, tmp, conf_dir = plan
     flag = f"-XX:SharedArchiveFile={archive}" if tmp is None else f"-XX:ArchiveClassesAtExit={tmp}"
+    # a JVM that dies mapping a damaged archive writes its crash log here,
+    # not into the caller's directory; _remove_stale clears it when the
+    # next archive is published
+    crash_log = os.path.join(os.path.dirname(archive), "hs_err_pid%p.log")
     saved = os.environ.get("SPARK_CONF_DIR")
     os.environ["SPARK_CONF_DIR"] = conf_dir
     try:
-        spark = build({"spark.driver.extraJavaOptions": f"{flag} {CDS_QUIET}"})
+        spark = build({"spark.driver.extraJavaOptions": f"{flag} -XX:ErrorFile={crash_log} {CDS_QUIET}"})
     except PySparkRuntimeError as e:
         if e.getCondition() != "JAVA_GATEWAY_EXITED":
             raise

@@ -216,6 +216,7 @@ def test_truncated_archive_is_deleted_and_the_session_still_starts(trained_cache
     assert got["flags"] == [] and archive not in got["mapped"]
     assert not os.path.exists(archive) and not os.path.exists(archive + ".size")
     assert got["env_same"]
+    assert not list(tmp_path.glob("hs_err_pid*.log"))  # the crash log went to the cache dir
 
 
 def test_conf_dir_with_a_conf_file_launches_without_archive_flags(tmp_path):

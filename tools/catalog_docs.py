@@ -9,15 +9,14 @@ of its scaling docstring. Regenerate after adding operators:
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-from jaffle_shop_classic_spark.operators.catalog import (  # noqa: E402
-    _PRIORITY,
-    load_catalog,
-)
+from jaffle_shop_classic_spark.operators.catalog import WINDOW, load_catalog  # noqa: E402
 
 
 def first_sentence(doc: str, limit: int = 220) -> str:
@@ -38,19 +37,21 @@ def main() -> None:
         f"{sum(1 for s in cat.values() if not s.oracle)} rows-only "
         "(each rows-only entry's value-level pytest check is named in "
         "COVERAGE.md). The first 50 rows are the driver's correctness "
-        "window (`operators/catalog.py::_PRIORITY`).",
+        "window, ordered by `operators/catalog.py::certification_order`: "
+        "the reference surface, then entries changed since their last "
+        "green driver round, then the least recently certified.",
         "",
         "| # | query | oracle | what it does |",
         "|---|---|---|---|",
     ]
     for i, (name, spec) in enumerate(cat.items(), 1):
         marker = "✓" if spec.oracle else "rows"
-        window = "**" if i <= len(_PRIORITY) else ""
+        window = "**" if i <= WINDOW else ""
         lines.append(
             f"| {i} | {window}`{name}`{window} | {marker} | "
             f"{first_sentence(spec.doc)} |"
         )
-    with open("/root/repo/OPERATORS.md", "w") as f:
+    with open(os.path.join(REPO, "OPERATORS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote OPERATORS.md ({len(cat)} entries)")
 
