@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from jaffle_shop_classic_spark.operators.catalog import load_catalog  # noqa: E402
+from jaffle_shop_classic_spark.operators.catalog import driver_catalog, load_catalog  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -29,14 +29,14 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return {name: spec.fn for name, spec in load_catalog().items()}
+    """One entry per implemented operator from SURVEY.md §2, in driver order."""
+    return {name: spec.fn for name, spec in driver_catalog().items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB twin for each SQL-expressible query (others: rows-only check)."""
     return {
         name: spec.oracle
-        for name, spec in load_catalog().items()
+        for name, spec in driver_catalog().items()
         if spec.oracle is not None
     }

@@ -16,8 +16,9 @@ Parity rules (SURVEY §5 Tier 2):
 Driver order. The driver's correctness gate records the first ``WINDOW``
 entries of ``queries()`` into ``CORRECTNESS_r<N>.json`` (green: rows,
 schema and value hash match, ``err`` null; ``is_green`` says what counts
-for an entry with no oracle twin). ``load_catalog()`` orders the catalog
-by one rule, the analog of dbt's ``state:modified`` selector
+for an entry with no oracle twin). ``load_catalog()`` keeps registration
+order; ``driver_catalog()`` orders it for the driver, once per process, by
+one rule, the analog of dbt's ``state:modified`` selector
 (``certification_order``): ``REFERENCE_SURFACE`` first, then every due
 entry (its fingerprint differs from the one recorded at its last green
 round, or its latest record is red), then the rest; the last two groups
@@ -40,6 +41,7 @@ a round, the checkout holding the code the round ran.
 from __future__ import annotations
 
 import dis
+import functools
 import hashlib
 import importlib
 import importlib.util
@@ -107,16 +109,28 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 
 
 def load_catalog() -> dict[str, QuerySpec]:
+    """Every entry, in registration order: by module as in ``_MODULES``
+    (whatever order this process imported them in), then in the order
+    each module registers them."""
     global _loaded
     if not _loaded:
         for mod in _MODULES:
             importlib.import_module(mod)
-        with open(LEDGER) as fh:
-            ordered = {n: CATALOG[n] for n in certification_order(CATALOG, json.load(fh))}
+        specs = sorted(CATALOG.values(), key=lambda s: _MODULES.index(s.fn.__module__))
         CATALOG.clear()
-        CATALOG.update(ordered)
+        CATALOG.update((s.name, s) for s in specs)
         _loaded = True
     return CATALOG
+
+
+@functools.cache
+def driver_catalog() -> dict[str, QuerySpec]:
+    """Every entry, in driver order (``certification_order`` over the
+    committed ledger). Only what the driver or its window reads needs
+    this order; fingerprinting the catalog for it costs ~0.1 s."""
+    catalog = load_catalog()
+    with open(LEDGER) as fh:
+        return {n: catalog[n] for n in certification_order(catalog, json.load(fh))}
 
 
 def is_green(record: dict) -> bool:

@@ -313,8 +313,8 @@ _BANDS_SQL = (
 # (dedup_exact) already collapses them, and the candidate join stays
 # O(sum cap * bucket_count). 64 is ~4x the largest bucket observed at
 # sf0.1 (16), so the cap never fires on driver data — it exists for the
-# skewed tail at scale (exercised by tests/test_operators.py's hot-band
-# fixture).
+# skewed tail at scale (exercised by the hot-band tests in
+# tests/test_operators.py).
 MAX_BAND_SIZE = 64
 
 
@@ -352,7 +352,7 @@ def candidate_pairs(bands: DataFrame, cap: int | None = MAX_BAND_SIZE) -> DataFr
     substrate: full candidate graph semantics) keeps the self-join,
     whose identical per-key fanout parallelizes where a basket would
     serialize a hot bucket. Values identical either way; equivalence
-    pinned in tests/test_r16_optimizations.py.
+    pinned in tests/test_dedup.py.
     """
     if cap is None:
         x, y = bands.alias("x"), bands.alias("y")
@@ -1681,7 +1681,7 @@ def pagerank_ranks(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
     "size (it is a distribution, not a row sum), so the widest "
     "intermediate 85*s is <= 8.5e13 even with every unit of mass "
     "concentrated on one node (planted star-hub worst case matches an "
-    "exact Python twin in tests/test_round11_operators.py). "
+    "exact Python twin in tests/test_dedup.py). "
     "Integer addition is associative, so "
     "Spark's partial aggregation order and DuckDB's single-threaded "
     "fold produce the SAME value bit-for-bit, and `div` truncation "
@@ -2100,7 +2100,7 @@ KCORE_FIXPOINT_MAX_ROUNDS = 64
 # oracle unroll depth: rounds past convergence are no-ops at the
 # fixpoint, so the unrolled oracle equals the true k-core whenever the
 # graph converges within this many rounds —
-# tests/test_round10_operators.py asserts convergence well inside it at
+# tests/test_dedup.py asserts convergence well inside it at
 # sf0.001, and fixpoint() raises rather than return a non-fixpoint if
 # the live graph ever needs more
 KCORE_FIXPOINT_ORACLE_ROUNDS = 8
@@ -2938,7 +2938,7 @@ def q_dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each O(i) on UTF8String (code-point seek) = O(31 * n^2 / 2)
     # byte-steps per doc; one left fold over split(text, '') is O(n).
     # Measured at sf0.1 (same process, noop sink): 54.2 -> 1.35 s.
-    # Equivalence pinned by tests/test_r15_optimizations.py (random
+    # Equivalence pinned by tests/test_dedup.py (random
     # strings incl. empty + full-output equality vs the closed form)
     # and the unchanged DuckDB twin (hash MATCH at sf0.001/sf0.01).
     # length(text) >= 1 guard: split('', '') yields [''] (Java split
@@ -3110,7 +3110,7 @@ def q_dedup_minhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — exact for sets, no explode, no pair-keyed shuffle; the two size
     # joins dissolve into size(arr). Equivalence (incl. the zero-
     # intersection pairs the old inner join dropped: 3*0 >= la+lb is
-    # false for non-empty docs) pinned in tests/test_r15_optimizations.
+    # false for non-empty docs) pinned in tests/test_dedup.py.
     arr = sh.groupBy("doc_id").agg(F.collect_list("s").alias("ss"))
     aa = arr.select(
         F.col("doc_id").alias("doc_a"),

@@ -1567,7 +1567,7 @@ HIST_LO, HIST_HI = 0.0, 600_000.0
     "(DuckDB 1.0 has no width_bucket) with a bucket width chosen "
     "exactly representable in binary so floor() agrees bit-for-bit "
     "(boundary-exact edge assignment asserted in "
-    "tests/test_round11_operators.py). Integer surface is plain "
+    "tests/test_extensions.py). Integer surface is plain "
     "counts — headroom is the int64 count ceiling itself, "
     "unreachable at any SF.",
 )
@@ -2134,7 +2134,7 @@ def q_copurchase_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the ordered pairs a < b fall out of one codegen transform over
     # the sorted set — no second shuffle of the relation, no join, and
     # the within-basket quadratic stays bounded by basket size exactly
-    # as before. Equivalence pinned in tests/test_r15_optimizations.py.
+    # as before. Equivalence pinned in tests/test_extensions.py.
     baskets = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("parts")
     )
@@ -2658,7 +2658,7 @@ def q_json_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exactness proof. int64 headroom (audited round 11): bucket/"
     "position arithmetic is div/mod 32768 — no multiply — so the op "
     "is exact over the full non-negative int64 id domain (planted "
-    "worst case at 2^62 in tests/test_round11_operators.py).",
+    "worst case at 2^62 in tests/test_extensions.py).",
 )
 def q_distinct_exact_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")

@@ -3362,7 +3362,7 @@ PASS_AT_K = 3
     "projection. int64 headroom (audited round 11): the widest term "
     "is f*(f-1)*(f-2) <= n^3, exact up to n = 2_097_151 samples per "
     "task (planted worst case at n = 2e6 in "
-    "tests/test_round11_operators.py); the millionths group sum holds "
+    "tests/test_mining_operators.py); the millionths group sum holds "
     "to 9.2e12 tasks per group. Scale: one keyed aggregate over "
     "lineitem, one partial->final per-priority aggregate. Ref: no "
     "reference analog; estimator per the public Codex/HumanEval "
@@ -6123,7 +6123,7 @@ def q_graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identities: count doubles, sx = Σx + Σy, sxx = Σx² + Σy² (decimal
     # sums added BEFORE the double cast), sxy = 2·Σxy (doubled in
     # decimal). Guide §2.3. Equivalence pinned in
-    # tests/test_r15_optimizations.py.
+    # tests/test_mining_operators.py.
     mom = ends.agg(
         (F.count(F.lit(1)) * 2).cast("bigint").alias("m2"),
         (F.sum("x") + F.sum("y")).cast("bigint").alias("sx"),

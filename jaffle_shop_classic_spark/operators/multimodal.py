@@ -152,7 +152,7 @@ def decode_stub_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
 # added nothing but a weaker check on the same plumbing. The kernels
 # stay — decode_stub_batch is the graceful-degrade fallback for
 # non-PNG/corrupt payloads and both are value-tested directly in
-# tests/test_operators.py.
+# tests/test_operators.py and tests/test_multimodal.py.
 def q_mm_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")

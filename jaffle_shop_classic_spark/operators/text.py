@@ -2422,7 +2422,7 @@ ROUGE_MAX_TOKENS = 80  # LCS DP cost bound per pair (O(80*80) ints)
     "text_rouge_l",
     oracle=None,  # LCS is not SQL-expressible — rows-only; the DP kernel
     # is value-pinned against a pure-Python reference and analytic
-    # planted cases in tests/test_round9_operators.py
+    # planted cases in tests/test_text.py
     doc="Corpus ROUGE-L — the LCS-based generation metric next to "
     "eval_bleu_corpus's clipped n-gram precision (BLEU rewards exact "
     "contiguous overlap; ROUGE-L credits in-order but GAPPY overlap, "

@@ -23,7 +23,7 @@ recompiles on every pass: a ``catalog_mix`` benchmark pass generates
 that starts out interpreted. A cold pass over the full catalog at
 sf0.001 compiles ~4,600 classes (220-250 of them differ between runs
 and miss at any size); 8192 gives each segment ~1.7x its mean share.
-SCALING.md has the measurements.
+SCALING.md ("The generated-class cache") has the measurements.
 
 - The cache is per JVM: the driver and each executor keep their own
   copy (in local mode they share one JVM and one cache).
@@ -62,7 +62,8 @@ When ``get_spark()`` is about to launch the JVM (no gateway yet), it
 starts it from a dynamic CDS archive (JEP 350) of those classes instead,
 through ``-XX:SharedArchiveFile`` in ``spark.driver.extraJavaOptions``;
 then ~440 still come from the jars. On a quiet 4-core VM that takes
-``get_spark()`` from ~3-5 s to ~2 s; SCALING.md has the A/B.
+``get_spark()`` from ~3-5 s to ~2 s; SCALING.md ("Driver JVM start")
+has the A/B.
 
 - The archive is keyed by Spark's jar list (each jar's name, size and
   mtime), the JDK's ``release`` file and the compressed-oops mode of the

@@ -349,7 +349,7 @@ def _stream_state_parts(
     holds. So the count follows the bytes a micro-batch carries, not the
     core count the session's `spark.sql.shuffle.partitions` follows: on
     one 32-core session at sf0.1 the interval join ran 12.1 / 3.97 /
-    3.18 s at 32 / 8 / 2 partitions (r16). At cluster scale state is
+    3.18 s at 32 / 8 / 2 partitions (commit 7059751). At cluster scale state is
     O(watermark horizon), so bytes per partition is the knob that holds.
 
     The floor lets per-batch compute (Python stateful kernels, window
@@ -358,7 +358,7 @@ def _stream_state_parts(
     beyond it runs in a second wave of tasks: another round of
     per-store commits and no more parallelism. On 4 cores floor 4 beat
     8 on every entry measured, and floor 2 slowed the two pandas
-    entries (SCALING.md, round-16 section)."""
+    entries (SCALING.md, "Streaming state partitions")."""
     size = os.path.getsize(os.path.join(sf_dir, source))
     floor = min(STREAM_MIN_PARTS, spark.sparkContext.defaultParallelism)
     return max(

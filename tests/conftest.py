@@ -4,6 +4,7 @@ import os
 import sys
 
 import pytest
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -27,3 +28,23 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def seed_dir():
     return SEED_DIR
+
+
+def write_docs(spark, path, rows):
+    """Write a ``documents`` table under ``path``: ``rows`` are full
+    (doc_id, text, lang, source, n_chars) tuples, or {doc_id: text}."""
+    if isinstance(rows, dict):
+        rows = [(i, t, "en", "src0", len(t)) for i, t in rows.items()]
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    ).write.mode("overwrite").parquet(f"{path}/documents.parquet")
+
+
+def write_events(spark, path, rows):
+    """Write an ``events`` table under ``path``; ``ts`` is given as a string."""
+    spark.createDataFrame(
+        rows,
+        "event_id long, ts string, user_id long, event_type string, value double, props string",
+    ).withColumn("ts", F.col("ts").cast("timestamp")).write.mode("overwrite").parquet(
+        f"{path}/events.parquet"
+    )

@@ -1,6 +1,6 @@
 """The driver's 50-slot certification window is derived, not hand-kept.
 
-``load_catalog()`` orders the catalog by one rule
+``driver_catalog()`` orders the catalog by one rule
 (``operators/catalog.py::certification_order``). These tests drive it
 with edited copies of the committed ledger; none needs a Spark session.
 """
@@ -59,10 +59,28 @@ def _window(catalog, ledger) -> list[str]:
     return certification_order(catalog, ledger)[:WINDOW]
 
 
-def test_load_catalog_applies_the_rule(catalog):
-    names = list(catalog)
+def test_queries_apply_the_rule(catalog):
+    # in a fresh interpreter: only the driver's queries() pays for the order.
+    # The rule is applied there too: a fingerprint reads module-level data,
+    # and some of it is a cache that running an entry fills in this process.
+    code = (
+        "import json, sys\n"
+        "from jaffle_shop_classic_spark.operators.catalog import LEDGER, certification_order, load_catalog\n"
+        "load_catalog()\nyaml_imported = 'yaml' in sys.modules\n"
+        "import __spark_entry__\n"
+        "names = list(__spark_entry__.queries())\n"
+        "rule = certification_order(load_catalog(), json.load(open(LEDGER)))\n"
+        "print(json.dumps([yaml_imported, names, rule]))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True, check=True, timeout=300,
+        env={**os.environ, "PYTHONPATH": REPO},
+    ).stdout.splitlines()[-1]
+    yaml_imported, names, rule = json.loads(out)
+    assert not yaml_imported
     assert names[: len(REFERENCE_SURFACE)] == list(REFERENCE_SURFACE)
-    assert names == certification_order(catalog, _ledger())
+    assert sorted(names) == sorted(catalog)
+    assert names == rule
 
 
 @pytest.mark.parametrize("edit", [{"fingerprint": "0" * 16}, {"latest": {"round": 16, "green": False}}],

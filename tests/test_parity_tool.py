@@ -1,9 +1,12 @@
-"""``tools/parity.py`` sweep: a dead driver JVM is one named error.
+"""``tools/parity.py``: the local replica of the driver's gate.
 
 When the JVM behind the session exits mid-sweep, every later entry fails
 to reach it ("connection refused"). The sweep reports the death once,
 with the entry that was running and the JVM's exit status, and stops
-with a non-zero exit. Stub sessions stand in for Spark here.
+with a non-zero exit. The sweep tests use stub sessions for Spark.
+
+Cells compare as the driver's value hash does: an integral double is not
+the integer of the same value.
 """
 
 from __future__ import annotations
@@ -11,7 +14,10 @@ from __future__ import annotations
 import subprocess
 from types import SimpleNamespace
 
-from tools.parity import sweep
+import duckdb
+
+from jaffle_shop_classic_spark.operators.catalog import load_catalog
+from tools.parity import TABLES, _rows_multiset, compare, sweep
 
 
 class _Proc:
@@ -59,3 +65,21 @@ def test_entry_errors_with_a_live_jvm_keep_the_sweep_going(capsys):
     assert code == 1
     assert ran == names
     assert len(fails) == 2 and all("'status': 'ERROR'" in ln for ln in fails)
+
+
+def test_integral_double_is_not_an_integer():
+    assert _rows_multiset(["n"], [(8,)]) != _rows_multiset(["n"], [(8.0,)])
+    assert _rows_multiset(["n"], [(0,)]) != _rows_multiset(["n"], [(0.0,)])
+    assert _rows_multiset(["n", "x"], [(8, 0.5)]) == _rows_multiset(["x", "n"], [(0.5, 8)])
+    assert _rows_multiset(["x"], [(8.0,)]) == _rows_multiset(["x"], [(8.0000000001,)])
+
+
+def test_assortativity_edge_count_is_an_integer_on_both_sides(spark, sf_dir):
+    # Spark's n_edges is a BIGINT; a twin that divides with `/` returns a
+    # DuckDB DOUBLE, which this gate now reports as a value mismatch
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    df = load_catalog()["graph_degree_assortativity"].fn(spark, sf_dir)
+    res = compare("graph_degree_assortativity", df, con)
+    assert res["status"] == "MATCH", res

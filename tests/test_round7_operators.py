@@ -7,11 +7,7 @@ from pyspark.sql import functions as F
 
 from jaffle_shop_classic_spark.operators.catalog import load_catalog
 
-
-def _write_docs(spark, path, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.mode("overwrite").parquet(f"{path}/documents.parquet")
+from conftest import write_docs, write_events
 
 
 def test_fuzzy_join_finds_planted_typo_pair(spark, tmp_path):
@@ -66,7 +62,7 @@ def test_lr_classifier_beats_majority_on_separable_corpus(spark, tmp_path):
         rows.append((i, "alpha words only here " * 3, "en", "web", 66))
     for i in range(40):
         rows.append((100 + i, "12345 67890 11111 22222 " * 3, "zh", "web", 72))
-    _write_docs(spark, tmp_path, rows)
+    write_docs(spark, tmp_path, rows)
     r = load_catalog()["quality_lr_classifier"].fn(spark, str(tmp_path)).collect()[0]
     assert r["n_docs"] == 100
     assert r["n_correct"] > 60  # beats predicting the majority class
@@ -85,7 +81,7 @@ def test_sparse_tfidf_pairs_ranks_shared_shingles_first(spark, tmp_path):
         # many docs carrying only the boilerplate => df(boiler shingles) high
         *[(10 + i, f"filler{i} filler{i}b {boiler}", "en", "web", 1) for i in range(200)],
     ]
-    _write_docs(spark, tmp_path, rows)
+    write_docs(spark, tmp_path, rows)
     rows_out = load_catalog()["sim_sparse_tfidf_pairs"].fn(spark, str(tmp_path)).collect()
     pairs = {(r["doc_a"], r["doc_b"]): r["cosine"] for r in rows_out}
     assert (1, 2) in pairs  # rare shared shingles pair up
@@ -101,7 +97,7 @@ def test_orc_roundtrip_preserves_values(spark, tmp_path):
         (2, "plain ascii text", "en", "web", 16),
         (3, None, "en", "web", 0),
     ]
-    _write_docs(spark, tmp_path, rows)
+    write_docs(spark, tmp_path, rows)
     from jaffle_shop_classic_spark.sources.parquet import load_table
 
     d = load_table(spark, str(tmp_path), "documents")
@@ -111,15 +107,6 @@ def test_orc_roundtrip_preserves_values(spark, tmp_path):
     # and the catalog aggregate runs green on the same fixture
     out = load_catalog()["source_orc_roundtrip"].fn(spark, str(tmp_path)).collect()
     assert sum(r["n_docs"] for r in out) == 3
-
-
-def _write_events(spark, path, rows):
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, value double, props string",
-    ).withColumn("ts", F.col("ts").cast("timestamp")).write.mode("overwrite").parquet(
-        f"{path}/events.parquet"
-    )
 
 
 def test_mad_flags_outlier_zscore_misses(spark, tmp_path):
@@ -135,7 +122,7 @@ def test_mad_flags_outlier_zscore_misses(spark, tmp_path):
     for i in range(500):  # the mega-user
         rows.append((eid, "2024-01-02 00:00:00", 99, "view", 1.0, "{}"))
         eid += 1
-    _write_events(spark, tmp_path, rows)
+    write_events(spark, tmp_path, rows)
     got = {
         r["user_id"]: r["n_events"]
         for r in load_catalog()["users_anomaly_mad"].fn(spark, str(tmp_path)).collect()
@@ -151,7 +138,7 @@ def test_time_weighted_avg_weights_by_interval(spark, tmp_path):
         (2, "2024-01-01 00:09:00", 1, "v", 100.0, "{}"),
         (3, "2024-01-01 00:10:00", 1, "v", 55.0, "{}"),  # closes the span
     ]
-    _write_events(spark, tmp_path, rows)
+    write_events(spark, tmp_path, rows)
     r = load_catalog()["event_time_weighted_avg"].fn(spark, str(tmp_path)).collect()
     assert len(r) == 1
     assert r[0]["twa_value"] == 19.0
@@ -182,7 +169,7 @@ def test_corpus_token_ids_roundtrip_decode(spark, tmp_path):
         (1, "a a a b c", "en", "web", 9),
         (2, "b a c c a", "en", "web", 9),
     ]
-    _write_docs(spark, tmp_path, rows)
+    write_docs(spark, tmp_path, rows)
     out = {
         r["doc_id"]: r["token_ids"]
         for r in load_catalog()["corpus_token_ids"].fn(spark, str(tmp_path)).collect()
@@ -246,7 +233,7 @@ def test_pivot_dynamic_discovers_new_category(spark, tmp_path):
         (2, "2024-01-01 00:00:01", 1, "brand_new_type", 1.0, "{}"),
         (3, "2024-01-01 00:00:02", 2, "view", 1.0, "{}"),
     ]
-    _write_events(spark, tmp_path, rows)
+    write_events(spark, tmp_path, rows)
     df = load_catalog()["pivot_dynamic"].fn(spark, str(tmp_path))
     assert df.columns == ["user_id", "brand_new_type", "view"]
     got = {r["user_id"]: (r["brand_new_type"], r["view"]) for r in df.collect()}
@@ -262,7 +249,7 @@ def test_ohlc_open_close_deterministic_under_ts_ties(spark, tmp_path):
         (3, "2024-01-01 00:05:00", 1, "v", 99.0, "{}"),
         (4, "2024-01-01 00:07:00", 1, "v", 5.0, "{}"),
     ]
-    _write_events(spark, tmp_path, rows)
+    write_events(spark, tmp_path, rows)
     r = load_catalog()["events_ohlc_bars"].fn(spark, str(tmp_path)).collect()
     assert len(r) == 1
     bar = r[0]
@@ -280,7 +267,7 @@ def test_impute_uses_user_median_then_global(spark, tmp_path):
         (4, "2024-01-01 00:03:00", 2, "error", 888.0, "{}"),  # -> global median
         (5, "2024-01-01 00:04:00", 3, "view", 50.0, "{}"),
     ]
-    _write_events(spark, tmp_path, rows)
+    write_events(spark, tmp_path, rows)
     got = {
         r["event_id"]: (r["value_imputed"], r["was_imputed"])
         for r in load_catalog()["impute_group_median"].fn(spark, str(tmp_path)).collect()
@@ -299,7 +286,7 @@ def test_nb_classifier_separates_disjoint_vocabularies(spark, tmp_path):
         rows.append((i, "hello world again hello", "en", "web", 1))
     for i in range(20):
         rows.append((100 + i, "bonjour monde encore bonjour", "fr", "web", 1))
-    _write_docs(spark, tmp_path, rows)
+    write_docs(spark, tmp_path, rows)
     got = {
         (r["true_lang"], r["pred_lang"]): r["n_docs"]
         for r in load_catalog()["lang_nb_classifier"].fn(spark, str(tmp_path)).collect()
@@ -371,7 +358,7 @@ def test_chi2_ranks_discriminative_tokens_first(spark, tmp_path):
         rows.append((i, "shared exclusive_en shared", "en", "web", 1))
     for i in range(30):
         rows.append((100 + i, "shared exclusive_fr shared", "fr", "web", 1))
-    _write_docs(spark, tmp_path, rows)
+    write_docs(spark, tmp_path, rows)
     out = load_catalog()["chi2_feature_select"].fn(spark, str(tmp_path)).collect()
     top_en = [r["tok"] for r in out if r["lang"] == "en"][0]
     top_fr = [r["tok"] for r in out if r["lang"] == "fr"][0]
@@ -436,7 +423,7 @@ def test_jsonl_roundtrip_preserves_unicode(spark, tmp_path):
         (1, 'quote " backslash \\ newline\nunicode héllo', "de", "web", 40),
         (2, "plain", "en", "web", 5),
     ]
-    _write_docs(spark, tmp_path, rows)
+    write_docs(spark, tmp_path, rows)
     out = load_catalog()["source_jsonl_roundtrip"].fn(spark, str(tmp_path)).collect()
     assert sum(r["n_docs"] for r in out) == 2
     # checksum equality with a direct computation over the originals

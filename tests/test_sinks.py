@@ -282,3 +282,85 @@ def test_jsonl_manifest_timestamp_instant_survives_session_timezone(spark, tmp_p
             assert mf_back.select(F.col("ts").cast("long")).first()[0] == epoch, tz
     finally:
         spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+def test_stream_legacy_pending_adopted_when_its_batches_exist(spark, tmp_path):
+    """Round-11 advice (low): a LEGACY pending file (pre-'checkpoint'-key
+    format) left by a run that crashed after committing batches but
+    before the generation flip used to be treated as foreign on resume
+    (pending_ckpt None != ckpt_id), silently deleted, and the resume fell
+    back to the prior generation — leaving that generation's stale
+    higher-numbered batch dirs live (duplicate rows). The migration path
+    adopts a checkpoint-less pending IFF batch dirs stamped with its
+    generation already exist on disk."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    from jaffle_shop_classic_spark.sources.jsonl_sink import (
+        GENERATION_FILE,
+        GENERATION_PENDING_FILE,
+        read_all_batches,
+        write_stream_exactly_once,
+    )
+
+    src = str(tmp_path / "src")
+
+    def add_file(i):
+        spark.range(i * 10, i * 10 + 10).select(
+            F.col("id").alias("k")
+        ).coalesce(1).write.mode("overwrite").parquet(f"{src}/f{i}")
+
+    def start(checkpoint):
+        q = write_stream_exactly_once(
+            spark.readStream.schema("k bigint")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{src}/f*"),
+            sink,
+            checkpoint,
+        )
+        q.awaitTermination(120)
+
+    sink = str(tmp_path / "sink")
+    for i in range(2):
+        add_file(i)
+    # run 1 (ckpt1): batches 0,1 live as generation 1
+    start(str(tmp_path / "ckpt1"))
+    # fresh restart (ckpt2): reprocesses everything as generation 2
+    add_file(2)
+    start(str(tmp_path / "ckpt2"))
+    gpath = os.path.join(sink, GENERATION_FILE)
+    ppath = os.path.join(sink, GENERATION_PENDING_FILE)
+    with open(gpath) as f:
+        assert json.load(f)["generation"] == 2
+
+    # rewind disk to the legacy crash-pre-flip state: live file still at
+    # generation 1, pending staged in the OLD format (no checkpoint key),
+    # batch dirs already stamped with generation 2
+    with open(gpath, "w") as f:
+        json.dump({"generation": 1}, f)
+    with open(ppath, "w") as f:
+        json.dump({"generation": 2}, f)
+
+    # resume ckpt2: the checkpoint-less pending is adoptable because its
+    # generation's batches exist — flip completes on the next commit
+    add_file(3)
+    start(str(tmp_path / "ckpt2"))
+    with open(gpath) as f:
+        assert json.load(f)["generation"] == 2
+    assert not os.path.exists(ppath)
+    got, rows = read_all_batches(spark, sink)
+    assert rows == 40 and sorted(r["k"] for r in got.collect()) == list(range(40))
+
+    # a checkpoint-less pending with NO batches stamped by it is still
+    # foreign: dropped, generation unchanged
+    with open(ppath, "w") as f:
+        json.dump({"generation": 9}, f)
+    add_file(4)
+    start(str(tmp_path / "ckpt2"))
+    assert not os.path.exists(ppath)
+    with open(gpath) as f:
+        assert json.load(f)["generation"] == 2
+    got2, rows2 = read_all_batches(spark, sink)
+    assert rows2 == 50 and sorted(r["k"] for r in got2.collect()) == list(range(50))

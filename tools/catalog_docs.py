@@ -1,8 +1,9 @@
 """Generate OPERATORS.md — the navigable index of the query catalog.
 
-One row per registered catalog entry, in driver registration order
-(priority window first), with its oracle status and the first sentence
-of its scaling docstring. Regenerate after adding operators:
+One row per registered catalog entry, in driver order
+(``driver_catalog()``: the correctness window first), with its oracle
+status and the first sentence of its scaling docstring. Regenerate after
+adding operators:
 
     python tools/catalog_docs.py
 """
@@ -16,7 +17,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from jaffle_shop_classic_spark.operators.catalog import WINDOW, load_catalog  # noqa: E402
+from jaffle_shop_classic_spark.operators.catalog import WINDOW, driver_catalog  # noqa: E402
 
 
 def first_sentence(doc: str, limit: int = 220) -> str:
@@ -27,7 +28,7 @@ def first_sentence(doc: str, limit: int = 220) -> str:
 
 
 def main() -> None:
-    cat = load_catalog()
+    cat = driver_catalog()
     lines = [
         "# OPERATORS — the query catalog, in driver order",
         "",

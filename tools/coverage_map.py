@@ -47,10 +47,10 @@ def green_rounds() -> dict[str, list[int]]:
 
 
 def main() -> int:
-    from jaffle_shop_classic_spark.operators.catalog import LEDGER, load_catalog
+    from jaffle_shop_classic_spark.operators.catalog import LEDGER, driver_catalog
     from tools.certify import projected_windows
 
-    cat = load_catalog()
+    cat = driver_catalog()
     rounds = green_rounds()
     with open(LEDGER) as f:
         ledger = json.load(f)

@@ -45,9 +45,11 @@ def _norm_cell(v):
         # vocab_heaps_law red row) — the local gate must be at least as
         # strict, so a DuckDB -0.0 vs Spark +0.0 now FAILS here too.
         # Queries canonicalize with `round(x, n) + 0` in both engines.
-        if v == 0:
-            return "-0" if math.copysign(1.0, v) < 0 else "0"
-        return format(v, ".9g")
+        # An integral double keeps a ".0": the driver's hash tells a
+        # DuckDB DOUBLE 8.0 from a Spark BIGINT 8 (the r16
+        # graph_degree_assortativity red), so this gate must too.
+        text = format(v, ".9g")
+        return text + ".0" if text.lstrip("-").isdigit() else text
     if isinstance(v, datetime):
         # strip tzinfo: DuckDB TIMESTAMPTZ isoformats with +00:00 while
         # Spark's session-UTC collect is naive — same instant, one repr

@@ -96,7 +96,7 @@ def tier2_parity_pass() -> int:
     if not os.path.isdir(PARITY_SF_DIR):
         print(f"preflight: SKIP tier-2 parity (missing {PARITY_SF_DIR})")
         return 0
-    tier2 = list(cat_mod.load_catalog().values())[cat_mod.WINDOW:]
+    tier2 = list(cat_mod.driver_catalog().values())[cat_mod.WINDOW:]
     names = [s.name for s in tier2 if s.oracle is not None]
     print(f"preflight: tier-2 parity over {len(names)} queries at {PARITY_SF_DIR}")
     rc = parity.main([PARITY_SF_DIR, *names])
